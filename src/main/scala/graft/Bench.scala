@@ -34,7 +34,7 @@ object Bench {
     * canonical dir (the [[Plans.write]] loop, sans explain) with
     * [[PlanCache.beginConsumer]] tagging, so the sweep knows which
     * registry queries consume which family caches — the map that lets
-    * the timing loop proactively unpersist a LIVE cache the moment
+    * the timing loop proactively release a LIVE cache the moment
     * its last consumer has run (r11: a 312-query sf10 sweep carried
     * ~70 GB of spent family caches into ENOSPC). Regime gates can
     * flip with scale, so the census is a lower bound on cache NAMES
@@ -154,7 +154,7 @@ object Bench {
       // have no GC in the timed path at all
       ran += name
       val pressure = maybeReclaimShuffleDisk()
-      // consumer-aware valve: unpersist LIVE family caches whose
+      // consumer-aware valve: release LIVE family caches whose
       // (census ∪ observed) consumers have all run — proactive, so a
       // sweep's peak scratch footprint tracks the ACTIVE family, not
       // the whole day's history; under measured pressure also evict

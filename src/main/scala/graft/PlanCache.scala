@@ -2,24 +2,35 @@ package graft
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Per-(session, dir) memo of derived relations that several
+/** The one materialization primitive of the operator library, and
+  * the per-(session, dir) memo of derived relations that several
   * operators (or several branches of one operator) re-derive
   * (cleaned ABR, blocked fuzzy matches, tf tables, packed bitsets).
-  * Without it, a bench/verify run re-executes the shared lineage once
-  * per consuming query; with it, the first consumer materializes the
-  * relation into the block-manager cache and later consumers reuse
-  * the InMemoryRelation.
   *
-  * This is also the LIFECYCLE home for every persisted intermediate
-  * in the operator library: operators never call bare `.persist()`
-  * (which leaks the blocks for the session lifetime — nothing ever
-  * unpersists them), they route through [[cached]] so `clear()` /
-  * `invalidate(dir)` reclaims everything in one sweep at run end.
-  * Entries must be deterministic functions of (dir); never cache raw
-  * fact tables — only aggregated/derived relations an operator would
-  * otherwise persist anyway.
+  * [[materialize]] is the contract every persisted intermediate in
+  * `src/main` goes through (`PersistSiteSpec` fails CI on any other
+  * `persist`/`cache`/`checkpoint` call):
+  *  - eager: one job computes the relation when the frame is built;
+  *  - lineage truncated: the result is a `LogicalRDD` leaf over the
+  *    stored blocks, so every consumer compiles a constant-size plan
+  *    (partitioning and ordering carry over into the leaf);
+  *  - fails loudly on block loss: a consumer that finds a block gone
+  *    raises a `SparkException`, never silently returns fewer rows;
+  *    `invalidate(dir)` then rebuilds the entry from its sources;
+  *  - freed by [[release]] (one frame), `invalidate(dir)` (everything
+  *    scoped to a dir) or [[clear]] (everything ever materialized).
+  *
+  * [[cached]] memoizes a materialized relation by (name, session,
+  * dir). Without it, a bench/verify run re-executes the shared
+  * lineage once per consuming query; with it, the first consumer
+  * builds the relation and later consumers scan its blocks. Entries
+  * must be deterministic functions of (dir); never cache raw fact
+  * tables — only aggregated/derived relations an operator would
+  * otherwise materialize anyway.
   */
 object PlanCache {
   private val cache = TrieMap.empty[(String, SparkSession, String), DataFrame]
@@ -30,7 +41,7 @@ object PlanCache {
   // kills + the graph family's disk-thrash exponent). Bench tags each
   // registry query as the current consumer; every cached() touch
   // records (cache name → consumers, last-touch epoch), and
-  // [[releaseAfter]] unpersists entries that provably (census) or
+  // [[releaseAfter]] releases entries that provably (census) or
   // heuristically (idle, under measured disk pressure) have no
   // remaining consumer. A wrong eviction is a recompute, never a
   // correctness event — cached() just rebuilds.
@@ -50,7 +61,7 @@ object PlanCache {
     */
   def consumersSeen: Map[String, Set[String]] = touchedBy.toMap
 
-  /** Unpersist (and drop) entries under `dir` with no remaining
+  /** Release (and drop) entries under `dir` with no remaining
     * consumer: proactively when the census knows the entry's full
     * consumer set and every consumer already ran; under measured
     * scratch-disk pressure also entries the census never saw
@@ -96,35 +107,20 @@ object PlanCache {
     }
 
   def cached(name: String, spark: SparkSession, dir: String)(build: => DataFrame): DataFrame = {
-    // entries for stopped sessions are dead weight: their persisted
-    // blocks are already gone with the session's block manager, and
-    // keeping them would pin the SparkSession itself for the process
-    // lifetime — evict them whenever the cache is touched
+    // entries for stopped sessions are dead weight: their blocks are
+    // already gone with the session's block manager, and keeping them
+    // would pin the SparkSession itself for the process lifetime —
+    // evict them whenever the cache is touched
     cache.filterInPlace { case ((_, s, _), _) => !s.sparkContext.isStopped }
     val key = (name, spark, dir)
     recordTouch(key)
     cache.get(key) match {
       case Some(df) => df
       case None =>
-        // Lineage truncation, not persist(): an InMemoryRelation keeps
-        // the full child plan inside the tree, and nested family
-        // caches multiply every consumer's plan size — AQE posts a
-        // plan-update event per query stage and each event stringifies
-        // the WHOLE tree (explainString + SparkPlanInfo.fromSparkPlan
-        // on the driver's main thread), so with persist() the r13
-        // thread dumps showed the bench driver burning 30+ s/query in
-        // string generation while all 32 executor threads sat parked.
-        // localCheckpoint materializes the relation once (same work as
-        // the first consumer's action under persist) and replaces the
-        // plan with a LogicalRDD LEAF — partitioning and ordering are
-        // preserved (Dataset.checkpoint carries outputPartitioning/
-        // outputOrdering into the LogicalRDD), so consumers that ride
-        // the cache's clustering still skip their exchange, and every
-        // consumer now compiles a constant-size subtree.
-        val built = build.localCheckpoint()
+        val built = materialize(build, dir)
         // putIfAbsent (not getOrElseUpdate): two threads may race the
-        // build — the loser's checkpointed blocks must be unpinned,
-        // not stranded in the block manager forever
+        // build — the loser's blocks must be freed, not stranded in
+        // the block manager forever
         cache.putIfAbsent(key, built) match {
           case Some(winner) => release(built); winner
           case None => built
@@ -132,40 +128,77 @@ object PlanCache {
     }
   }
 
-  /** Free a cached relation's storage. For a localCheckpoint'd frame
-    * the blocks belong to the materialized RDD inside the LogicalRDD
-    * leaf (Dataset.unpersist alone would not reach them).
-    */
-  private def release(df: DataFrame): Unit = {
-    try df.unpersist() catch { case _: Exception => () }
-    try df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    } catch { case _: Exception => () }
-  }
+  // every RDD materialize() made and nobody released yet, with the dir
+  // it is scoped to ("" = unscoped: only clear() frees it)
+  private val owned = TrieMap.empty[RDD[_], String]
 
-  /** Drop (and unpersist) every entry cached under `dir` — call after
-    * rewriting data in place, so later reads rebuild from the new
-    * files instead of serving the stale persisted relation.
-    */
-  def invalidate(dir: String): Unit =
-    cache.filterInPlace { case (k @ (_, _, d), df) =>
-      if (d == dir) {
-        release(df)
-        lastTouch.remove(k); false
-      }
-      else true
+  private def materializedRdd(df: DataFrame): Option[RDD[_]] =
+    df.queryExecution.analyzed match {
+      case lr: LogicalRDD if owned.contains(lr.rdd) => Some(lr.rdd)
+      case _ => None
     }
 
-  /** Unpersist and drop every cached plan — call when the data under
-    * a cached dir changes, or between test suites. The cache is
+  /** Compute `df` now and return it as a leaf over its stored blocks.
+    * A frame this method already made comes back unchanged (re-scoped
+    * to `dir` when one is given), so wrapping a materialized result in
+    * [[cached]] stores it once, not twice.
+    *
+    * Lineage truncation, not persist(): an InMemoryRelation keeps the
+    * full child plan inside the tree, and nested materializations
+    * multiply every consumer's plan size — AQE posts a plan-update
+    * event per query stage and each event stringifies the WHOLE tree
+    * on the driver's main thread, so with persist() the bench driver
+    * spent 30+ s/query in string generation while the executors sat
+    * parked. localCheckpoint materializes the relation once (the same
+    * work as the first consumer's action under persist) and replaces
+    * the plan with a LogicalRDD leaf that carries the output
+    * partitioning and ordering, so consumers that ride its clustering
+    * still skip their exchange.
+    */
+  def materialize(df: DataFrame, dir: String = ""): DataFrame = {
+    owned.filterInPlace { case (rdd, _) => !rdd.sparkContext.isStopped }
+    materializedRdd(df) match {
+      case Some(rdd) =>
+        if (dir.nonEmpty) owned.put(rdd, dir)
+        df
+      case None =>
+        val built = df.localCheckpoint()
+        owned.put(built.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd, dir)
+        built
+    }
+  }
+
+  /** Free the blocks of a frame [[materialize]] made (a no-op for any
+    * other frame). Consumers of the frame that run afterwards fail.
+    */
+  def release(df: DataFrame): Unit = materializedRdd(df).foreach(free)
+
+  private def free(rdd: RDD[_]): Unit = {
+    owned.remove(rdd)
+    try { rdd.unpersist(blocking = false); () } catch { case _: Exception => () }
+  }
+
+  /** Drop every entry cached under `dir` and free everything
+    * materialized for it — call after rewriting data in place, so
+    * later reads rebuild from the new files instead of serving the
+    * stale relation.
+    */
+  def invalidate(dir: String): Unit = {
+    cache.filterInPlace { case (k @ (_, _, d), _) =>
+      if (d == dir) lastTouch.remove(k)
+      d != dir
+    }
+    owned.collect { case (rdd, d) if d == dir => rdd }.foreach(free)
+  }
+
+  /** Drop every cached plan and free everything [[materialize]] ever
+    * made — call at run end, or between test suites. The cache is
     * otherwise intentionally process-lifetime: entries are one small
     * relation per (operator, session, dir).
     */
   def clear(): Unit = {
-    cache.values.foreach(release)
     cache.clear()
     lastTouch.clear()
+    owned.keys.foreach(free)
   }
 }

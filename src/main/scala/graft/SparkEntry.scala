@@ -3044,12 +3044,17 @@ object SparkEntry {
         |GROUP BY 1,2,3 ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
 
     "q14_promo_share" ->
-      """WITH m AS (
-        | SELECT strftime(l_shipdate, '%Y-%m') AS month,
-        |  round(sum(CASE WHEN p_type='PROMO'
-        |            THEN l_extendedprice*(1.0-l_discount) ELSE 0.0 END),2) AS promo_rev,
-        |  round(sum(l_extendedprice*(1.0-l_discount)),2) AS total_rev
-        | FROM lineitem JOIN part ON l_partkey=p_partkey GROUP BY 1)
+      """WITH u AS (
+        | SELECT strftime(l_shipdate, '%Y-%m') AS month, p_type,
+        |  CAST(round(l_extendedprice*100) AS BIGINT)
+        |   * (100 - CAST(round(l_discount*100) AS BIGINT)) AS rev
+        | FROM lineitem JOIN part ON l_partkey=p_partkey),
+        |m AS (
+        | SELECT month,
+        |  CAST((sum(CASE WHEN p_type='PROMO' THEN rev ELSE 0 END) + 50) // 100
+        |   AS DOUBLE) / 100 AS promo_rev,
+        |  CAST((sum(rev) + 50) // 100 AS DOUBLE) / 100 AS total_rev
+        | FROM u GROUP BY 1)
         |SELECT month, promo_rev, total_rev,
         | round(promo_rev/total_rev, 6) AS promo_share
         |FROM m ORDER BY month""".stripMargin,
@@ -3604,7 +3609,9 @@ object SparkEntry {
     "lineitem_monthly_yoy" ->
       """WITH m AS (SELECT CAST(year(l_shipdate) AS INT) AS yr,
         |   CAST(month(l_shipdate) AS INT) AS mo,
-        |   round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
+        |   CAST((sum(CAST(round(l_extendedprice*100) AS BIGINT)
+        |     * (100 - CAST(round(l_discount*100) AS BIGINT))) + 50) // 100
+        |    AS DOUBLE) / 100 AS revenue
         |  FROM lineitem GROUP BY 1, 2),
         |l AS (SELECT *, lag(yr) OVER (PARTITION BY mo ORDER BY yr) AS prev_yr,
         |   lag(revenue) OVER (PARTITION BY mo ORDER BY yr) AS prev_rev

@@ -727,15 +727,17 @@ object Graph {
     * shared pair cache and repartitioned on src; each round is two
     * semi-joins of the edge cache against the current alive set plus
     * one count-by-src — message-passing rounds like [[graphPagerank]].
-    * Each round's alive set is localCheckpoint'd (the
-    * [[graft.operators.Dedup]] components discipline): it is read
-    * three times (both endpoint filters of the next round + its own
-    * stat row), and WITHOUT lineage truncation the logical plan
-    * nests a copy of every earlier round, so Catalyst
-    * re-optimization cost compounds ~3-4x per round (measured 32 s
-    * for round 6 alone at sf0.01; ~1 s total with the checkpoint).
-    * Checkpointed state per round is |V_r| rows — monotonically
-    * shrinking. Output: R rows, constant in corpus size.
+    * Each round's alive set is materialized through
+    * [[graft.PlanCache.materialize]] (the [[graft.operators.Dedup]]
+    * components discipline): it is read three times (both endpoint
+    * filters of the next round + its own stat row), and WITHOUT
+    * lineage truncation the logical plan nests a copy of every
+    * earlier round, so Catalyst re-optimization cost compounds ~3-4x
+    * per round (measured 32 s for round 6 alone at sf0.01; ~1 s total
+    * with the checkpoint). Materialized state per round is |V_r| rows
+    * — monotonically shrinking. The returned trace reads every round,
+    * so the rounds are scoped to `dir`: `PlanCache.invalidate(dir)`
+    * or `clear()` frees them. Output: R rows, constant in corpus size.
     */
   def graphKcore(spark: SparkSession, dir: String,
                  k: Int = 80, rounds: Int = 6): DataFrame =
@@ -778,7 +780,7 @@ object Graph {
       val d =
         if (r == 1) degrees(spark, dir).select(col("node").as("src"), col("dg"))
         else kcoreRoundDegrees(edges, alive, aliveFits)
-      val a = d.filter(col("dg") >= k).localCheckpoint()
+      val a = graft.PlanCache.materialize(d.filter(col("dg") >= k), dir)
       alive = a.select(col("src").as("node"))
       a.agg(
         lit(r).cast("int").as("round"),
@@ -791,8 +793,8 @@ object Graph {
   }
 
   /** One peel round's in-set degree table — exposed (package-private)
-    * because [[graphKcore]]'s localCheckpoint materializes each round
-    * eagerly, so the returned trace's plan shows only
+    * because [[graphKcore]] materializes each round eagerly, so the
+    * returned trace's plan shows only
     * `Scan ExistingRDD` heads and PlanAuditSpec could not otherwise
     * pin the per-round join regime the alive-side gate chooses.
     */

@@ -241,9 +241,9 @@ object Matching {
     // admitted at all (query coverage 0.485, top-1 agreement 0.464 at
     // forced-cap sf1). With K ≥ 1, every query holding ANY corpus
     // token gets candidates, so coverage is structural, not lucky.
-    val census = l.groupBy("token").agg(count(lit(1)).as("ln"))
-      .join(r.groupBy("token").agg(count(lit(1)).as("rn")), "token")
-      .persist()
+    val census = graft.PlanCache.materialize(
+      l.groupBy("token").agg(count(lit(1)).as("ln"))
+        .join(r.groupBy("token").agg(count(lit(1)).as("rn")), "token"))
     def volume(k: Long): Double = {
       val v = census.agg(sum(col("ln") * least(col("rn"), lit(k)))).head()
       if (v.isNullAt(0)) 0.0 else v.getLong(0).toDouble
@@ -260,7 +260,7 @@ object Matching {
     }
     val k = math.max(lo, 1L)
     val vol = volume(k)
-    census.unpersist()
+    graft.PlanCache.release(census)
     // (A global-mass champion side-channel — top docs by Σ_t imp
     // joined to every query, WAND-upper-bound style — was measured
     // and REJECTED: at an 80/20 budget split it lowered tfidf top-1
@@ -1194,8 +1194,9 @@ object Matching {
       .select((col("c_custkey") * 2).as("src"),
         (col("s_suppkey") * 2 + 1).as("dst"))
     // the fixpoint is a bounded per-matched-node relation and each
-    // propagation round is several jobs — cache the converged labels,
-    // not just the inputs, so repeated reads don't re-iterate
+    // propagation round is several jobs — cache the converged labels
+    // (already materialized, so stored as they are), not just the
+    // inputs, so repeated reads don't re-iterate
     graft.PlanCache.cached("entity_canonical_labels", spark, dir) {
       Dedup.labelPropagate(edges)
     }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -226,23 +226,37 @@ object Olap {
       .limit(20)
   }
 
+  /** l_extendedprice·(1 − l_discount) in exact integer units of 1e-4:
+    * both columns carry two decimals, so a BIGINT sum of this is the
+    * same in every row order — a double sum rounded to cents is not.
+    */
+  private val revenueUnits: Column =
+    round(col("l_extendedprice") * 100).cast("long") *
+      (lit(100L) - round(col("l_discount") * 100).cast("long"))
+
+  /** A sum of [[revenueUnits]] as dollars, rounded half-up to cents —
+    * exact while the sum stays below 2^53 units (about 9e11 dollars).
+    */
+  private def unitsToDollars(units: Column): Column =
+    floor((units + 50) / 100) / 100.0
+
   /** Promo revenue share by ship month (TPC-H Q14 shape): one
     * conditional aggregate over the joined fact — promo mass and
     * total mass come out of the SAME pass, so the ratio costs one
     * scan + one shuffle. The month key is derived map-side; part is
-    * a broadcast dim.
+    * a broadcast dim. Revenue sums exactly ([[revenueUnits]]).
     */
   def q14PromoShare(spark: SparkSession, dir: String): DataFrame = {
     val l = Tables.lineitem(spark, dir)
     val p = Tables.part(spark, dir).select("p_partkey", "p_type")
     l.join(broadcast(p), col("l_partkey") === col("p_partkey"))
       .withColumn("month", date_format(col("l_shipdate"), "yyyy-MM"))
-      .withColumn("rev", col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+      .withColumn("rev", revenueUnits)
       .groupBy("month")
       .agg(
-        round(sum(when(col("p_type") === "PROMO", col("rev")).otherwise(lit(0.0))), 2)
-          .as("promo_rev"),
-        round(sum("rev"), 2).as("total_rev"))
+        unitsToDollars(sum(when(col("p_type") === "PROMO", col("rev"))
+          .otherwise(lit(0L)))).as("promo_rev"),
+        unitsToDollars(sum("rev")).as("total_rev"))
       .withColumn("promo_share",
         round(col("promo_rev") / col("total_rev"), 6))
       .orderBy("month")
@@ -579,7 +593,7 @@ object Olap {
     */
   def ordersConcurrency(spark: SparkSession, dir: String): DataFrame = {
     // PlanCache'd: the per-day nets feed BOTH the in-block cumsum and
-    // the block totals — unpersisted, the orders scan + union +
+    // the block totals — uncached, the orders scan + union +
     // aggregation would run twice
     val deltas = graft.PlanCache.cached("concurrency_deltas", spark, dir) {
       val o = Tables.orders(spark, dir)
@@ -792,13 +806,13 @@ object Olap {
     * aggregate (one map-side-combined pass over lineitem), then a
     * 12-month lag window over the ~dozens of month rows, partitioned
     * by calendar month so each partition holds one row per year and
-    * the lag is exactly "same month last year".
+    * the lag is exactly "same month last year". Revenue sums exactly
+    * ([[revenueUnits]]).
     */
   def lineitemMonthlyYoy(spark: SparkSession, dir: String): DataFrame = {
     val m = Tables.lineitem(spark, dir)
       .groupBy(year(col("l_shipdate")).as("yr"), month(col("l_shipdate")).as("mo"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-        .as("revenue"))
+      .agg(unitsToDollars(sum(revenueUnits)).as("revenue"))
     val prev = Window.partitionBy("mo").orderBy("yr")
     m.withColumn("prev_yr", lag("yr", 1).over(prev))
       .withColumn("prev_year_revenue",
