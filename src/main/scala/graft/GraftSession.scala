@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One place for engine session config so Verify, Bench, and tests
-  * run identical plans.
+/** One place for engine session config so Verify, the benchmark and
+  * tests run identical plans.
   *
   * Scale posture: AQE on (runtime coalesce + skew-join split),
   * shuffle partitions sized for local[N] here but overridable — on a
@@ -30,7 +30,6 @@ object GraftSession {
       // the correct guard at cluster scale (tests lower them to pin
       // the injection on local data).
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "24g"))
 
   /** Builder preset for a REAL cluster, same plans as [[builder]]:
     * call with the job's total executor cores. Encodes the sizing

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import graft.operators.{Cleaning, Dedup, Matching, Quality, Sampling, TextAnalysis}
 import graft.sources.Sinks
 
@@ -41,7 +42,10 @@ object Pipeline {
     while (result.isEmpty) {
       attempt += 1
       try {
-        val out = df
+        // the published row count comes from the write itself, not a
+        // re-read: one Observation per attempt, read once _SUCCESS is in
+        val written = new Observation()
+        val out = df.observe(written, count(lit(1)).as("rows"))
         // ATOMIC publish (the incrementalAggregate rename discipline):
         // every attempt writes to a staging dir and only a COMPLETE
         // write (_SUCCESS present) is renamed over the live path — a
@@ -67,7 +71,7 @@ object Pipeline {
         if (hfs.exists(live)) hfs.rename(live, old)
         hfs.rename(stg, live)
         hfs.delete(old, true)
-        val rows = spark.read.parquet(s"$outDir/$name").count()
+        val rows = written.get("rows").asInstanceOf[Long]
         result = Some(StageResult(name, rows, (System.nanoTime() - t0) / 1e9, attempt))
       } catch {
         case e: Exception if attempt <= policy.retries =>
@@ -86,8 +90,9 @@ object Pipeline {
     * directly, without paying for a full pipeline run per case).
     */
   private[graft] def runStageForTest(spark: SparkSession, outDir: String,
-      policy: StagePolicy)(name: String, df: => DataFrame): StageResult =
-    runStage(spark, outDir, policy)(name, df)
+      policy: StagePolicy)(name: String, df: => DataFrame,
+      partitionCols: Seq[String] = Nil): StageResult =
+    runStage(spark, outDir, policy)(name, df, partitionCols)
 
   /** Run clean → match → quality over a testdata dir, writing each
     * stage's output as partitioned parquet under outDir. Returns

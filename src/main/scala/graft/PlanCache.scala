@@ -35,75 +35,24 @@ import org.apache.spark.sql.execution.LogicalRDD
 object PlanCache {
   private val cache = TrieMap.empty[(String, SparkSession, String), DataFrame]
 
-  // --- consumer-aware release (the sf10 scratch-disk valve) ---
-  // A full-registry sweep at sf10 accumulates ~70 GB of LIVE persisted
-  // family caches whose consumers have all already run (r11: 4 ENOSPC
-  // kills + the graph family's disk-thrash exponent). Bench tags each
-  // registry query as the current consumer; every cached() touch
-  // records (cache name → consumers, last-touch epoch), and
-  // [[releaseAfter]] releases entries that provably (census) or
-  // heuristically (idle, under measured disk pressure) have no
-  // remaining consumer. A wrong eviction is a recompute, never a
-  // correctness event — cached() just rebuilds.
+  // the registry query whose build is running, and the consumers each
+  // cache name has seen: the census `consumersSeen` reports
   @volatile private var consumer: String = ""
-  @volatile private var epoch: Int = 0
   private val touchedBy = TrieMap.empty[String, Set[String]]
-  private val lastTouch = TrieMap.empty[(String, SparkSession, String), Int]
 
-  /** Tag subsequent cached() touches with the registry query that
-    * caused them (Bench's census + timing loops). `e` orders entries
-    * by recency for the idle-eviction heuristic.
+  /** Tag subsequent [[cached]] touches with the query that caused them
+    * (`""` stops tagging). `e` is unused; the benchmark harness still
+    * passes it.
     */
-  def beginConsumer(q: String, e: Int): Unit = { consumer = q; epoch = e }
+  def beginConsumer(q: String, e: Int): Unit = consumer = q
 
-  /** Snapshot of cache-name → consumer-query names seen so far — the
-    * census Bench harvests after its sf0.001 plan-build pass.
-    */
+  /** Snapshot of cache name → the consumer queries that touched it. */
   def consumersSeen: Map[String, Set[String]] = touchedBy.toMap
 
-  /** Release (and drop) entries under `dir` with no remaining
-    * consumer: proactively when the census knows the entry's full
-    * consumer set and every consumer already ran; under measured
-    * scratch-disk pressure also entries the census never saw
-    * (SF-dependent regime caches) that have sat idle ≥ `idleEpochs`
-    * queries. Returns the evicted names for the bench log.
-    */
-  def releaseAfter(dir: String, ran: Set[String],
-      census: Map[String, Set[String]], pressure: Boolean,
-      idleEpochs: Int = 2): Seq[String] = {
-    val evicted = scala.collection.mutable.ArrayBuffer.empty[String]
-    cache.filterInPlace { case (k @ (name, _, d), df) =>
-      val drop = d == dir && {
-        val consumers = census.getOrElse(name, Set.empty) ++
-          touchedBy.getOrElse(name, Set.empty)
-        val allRan = census.contains(name) && consumers.subsetOf(ran)
-        // entries with a census-known FUTURE consumer are the last
-        // resort under pressure (8x the idle floor — evicting them
-        // trades a known rebuild for disk headroom); census-unknown
-        // entries evict at the floor
-        val hasFuture = census.contains(name) && !consumers.subsetOf(ran)
-        val floor = if (hasFuture) idleEpochs * 8 else idleEpochs
-        val idle = pressure &&
-          epoch - lastTouch.getOrElse(k, epoch) >= floor
-        allRan || idle
-      }
-      if (drop) {
-        release(df)
-        lastTouch.remove(k)
-        evicted += name
-      }
-      !drop
-    }
-    evicted.toSeq
-  }
-
-  private def recordTouch(key: (String, SparkSession, String)): Unit =
-    if (consumer.nonEmpty) {
-      touchedBy.updateWith(key._1) {
-        case Some(s) => Some(s + consumer)
-        case None => Some(Set(consumer))
-      }
-      lastTouch.put(key, epoch)
+  private def recordTouch(name: String): Unit =
+    if (consumer.nonEmpty) touchedBy.updateWith(name) {
+      case Some(s) => Some(s + consumer)
+      case None => Some(Set(consumer))
     }
 
   def cached(name: String, spark: SparkSession, dir: String)(build: => DataFrame): DataFrame = {
@@ -113,7 +62,7 @@ object PlanCache {
     // evict them whenever the cache is touched
     cache.filterInPlace { case ((_, s, _), _) => !s.sparkContext.isStopped }
     val key = (name, spark, dir)
-    recordTouch(key)
+    recordTouch(name)
     cache.get(key) match {
       case Some(df) => df
       case None =>
@@ -184,10 +133,7 @@ object PlanCache {
     * stale relation.
     */
   def invalidate(dir: String): Unit = {
-    cache.filterInPlace { case (k @ (_, _, d), _) =>
-      if (d == dir) lastTouch.remove(k)
-      d != dir
-    }
+    cache.filterInPlace { case ((_, _, d), _) => d != dir }
     owned.collect { case (rdd, d) if d == dir => rdd }.foreach(free)
   }
 
@@ -198,7 +144,6 @@ object PlanCache {
     */
   def clear(): Unit = {
     cache.clear()
-    lastTouch.clear()
     owned.keys.foreach(free)
   }
 }

@@ -2,6 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+
 /** Dumps physical plans of EVERY registered query to `PLANS.md` — the
   * reviewable artifact behind every scale claim in SURVEY §4
   * (broadcasts where dims are small, TakeOrdered for global top-k,
@@ -11,8 +15,9 @@ import java.nio.file.{Files, Paths}
   *
   * Every query in [[SparkEntry.queries]] gets a `## name` head with
   * at least the compact plan tree; the curated headline set plus the
-  * top-3 heaviest per operator family (measured from the committed
-  * `BENCH_FULL.json`) get the FULL formatted plan with per-node
+  * top-3 heaviest per operator family (measured by perfbench's
+  * full-registry sweep, committed as `BENCH_FULL.json`; see
+  * [[benchSeconds]]) get the FULL formatted plan with per-node
   * detail (PushedFilters / ReadSchema / join build sides).
   * [[PlanHeadsSpec]] fails the audit when a registered query has no
   * head or a family's heaviest lack full plans. Measured-gate
@@ -66,38 +71,34 @@ object Plans {
       .groupBy { case (k, _) => family(k) }
       .values.flatMap(_.sortBy { case (k, s) => (-s, k) }.take(3).map(_._1))
 
-  /** The bench artifact's per-query seconds (failed = -1 entries
-    * dropped). Absent file → empty map (headline-only full plans);
-    * a PRESENT-but-unparsable artifact, or one whose parsed entry
-    * count disagrees with its own `n_queries` field, THROWS — a
-    * format evolution must fail the PlanHeadsSpec audit loudly, not
-    * silently shrink the owed-full set (the r9 failure mode).
+  /** Per-query seconds from perfbench's full-registry sweep record,
+    * committed verbatim as `BENCH_FULL.json`: each query's median
+    * latency over the record's `timed` passes. Absent file → empty map
+    * (headline-only full plans). A record with a failed operation or
+    * an oracle mismatch, one without timed passes, or one that does
+    * not parse THROWS: a partial or failed sweep must fail the
+    * PlanHeadsSpec audit loudly, not silently shrink the owed-full set.
     */
   private[graft] def benchSeconds(path: String = "BENCH_FULL.json"): Map[String, Double] = {
     if (!Files.exists(Paths.get(path))) return Map.empty
-    val txt = Files.readString(Paths.get(path))
-    val start = txt.indexOf("\"queries\":")
-    require(start >= 0, s"$path: no \"queries\" field")
-    val open = txt.indexOf('{', start)
-    require(open >= 0, s"$path: \"queries\" is not an object")
-    var depth = 0; var i = open; var end = -1
-    while (i < txt.length && end < 0) {
-      val c = txt.charAt(i)
-      if (c == '{') depth += 1
-      else if (c == '}') { depth -= 1; if (depth == 0) end = i }
-      i += 1
+    def field(node: JsonNode, name: String): JsonNode = Option(node.get(name))
+      .getOrElse(throw new IllegalArgumentException(s"$path: no \"$name\" field"))
+    val rec = new ObjectMapper().readTree(Files.readString(Paths.get(path)))
+    val failed = field(rec, "failed")
+    require(failed.isIntegralNumber && failed.asLong == 0, s"$path: $failed failed operations")
+    val bad = field(rec, "oracle_bad")
+    require(bad.isObject && bad.isEmpty, s"$path: oracle mismatches $bad")
+    val timed = field(rec, "passes").elements.asScala
+      .filter(p => field(p, "kind").asText == "timed").toSeq
+    require(timed.nonEmpty, s"$path: no timed pass")
+    val latencies = for (p <- timed; op <- field(p, "ops").elements.asScala) yield {
+      require(op.size == 2 && op.get(1).isNumber, s"$path: bad operation $op")
+      op.get(0).asText -> op.get(1).asDouble
     }
-    require(end > open, s"$path: unbalanced \"queries\" object")
-    val entries = """"([A-Za-z0-9_]+)"\s*:\s*(-?[0-9][0-9.eE+\-]*)""".r
-      .findAllMatchIn(txt.substring(open + 1, end))
-      .map(m => m.group(1) -> m.group(2).toDouble).toSeq
-    """"n_queries"\s*:\s*(\d+)""".r.findFirstMatchIn(txt)
-      .map(_.group(1).toInt).foreach { exp =>
-        require(entries.size == exp,
-          s"$path: parsed ${entries.size} query timings but the " +
-            s"artifact says n_queries=$exp — format drift, fix the parser")
-      }
-    entries.filter(_._2 >= 0).toMap
+    latencies.groupMap(_._1)(_._2).view.mapValues { ts =>
+      val s = ts.sorted
+      (s((s.size - 1) / 2) + s(s.size / 2)) / 2
+    }.toMap
   }
 
   def main(args: Array[String]): Unit = {
@@ -110,11 +111,7 @@ object Plans {
   }
 
   /** Generate PLANS.md over `sfDir` with full plans for
-    * `requiredFull(measured)` — callable from [[Bench]] right after it
-    * lands a fresh BENCH_FULL.json, so the committed artifact pair can
-    * never disagree (the r9 PlanHeadsSpec failure: a post-commit
-    * driver bench reshuffled the per-family heaviest and orphaned 14
-    * owed-full plans).
+    * `requiredFull(measured)`.
     */
   def write(spark: org.apache.spark.sql.SparkSession, sfDir: String,
             measured: Map[String, Double]): Unit = {

@@ -37,10 +37,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         e.printStackTrace()
       }
-      // reclaim finished queries' shuffle files when scratch disk runs
-      // low (ContextCleaner runs on GC; see the Bench note — 49 GB of
-      // dead spill at sf10). Pressure-gated: a no-op at the gate SFs.
-      Bench.maybeReclaimShuffleDisk()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

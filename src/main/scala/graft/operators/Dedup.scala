@@ -448,6 +448,14 @@ object Dedup {
         .filter(col("jaccard") >= 0.5)
     }
 
+  /** The build body of the `ngram_bitsets` entry: (doc_id, lang, n, v). */
+  private[graft] def ngramBitsets(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir)
+      .filter(length(col("text")) >= 3)
+      .withColumn("bs", graft.functions.NgramBitset.ngramBitset(col("text")))
+      .select(col("doc_id"), col("lang"),
+        col("bs.n").cast("long").as("n"), col("bs.v").as("v"))
+
   /** All in-block pair scores, pre-threshold — exposed so tests can
     * bound the feature-hashing drift against exact gram-set jaccard.
     *
@@ -469,11 +477,7 @@ object Dedup {
     // explode, no shuffle; NgramBitsetSpec pins it bit-identical to
     // the explode+groupBy SQL formulation the oracle mirrors
     val dense = graft.PlanCache.cached("ngram_bitsets", spark, dir) {
-      Tables.documents(spark, dir)
-        .filter(length(col("text")) >= 3)
-        .withColumn("bs", graft.functions.NgramBitset.ngramBitset(col("text")))
-        .select(col("doc_id"), col("lang"),
-          col("bs.n").cast("long").as("n"), col("bs.v").as("v"))
+      ngramBitsets(spark, dir)
     }
     val inter = graft.functions.Vectors.bitsetInter("va", "vb")
     // the block key (lang) has cardinality ~5 → a plain equi-join

@@ -232,8 +232,8 @@ object Graph {
       }
     else perNodeTrianglesImpl(spark, dir, broadcastEdgesMaxBytes)
 
-  private def perNodeTrianglesImpl(spark: SparkSession, dir: String,
-                               broadcastEdgesMaxBytes: Long): DataFrame = {
+  private[graft] def perNodeTrianglesImpl(spark: SparkSession, dir: String,
+      broadcastEdgesMaxBytes: Long): DataFrame = {
     // canonical undirected edges (u < v): the keys of the shared
     // co-order pair relation — the family's one self-join, reused
     val e = coPairCounts(spark, dir).select("u", "v")

@@ -171,7 +171,7 @@ object Matching {
       matchFuzzyBlockedImpl(spark, dir)
     }
 
-  private def matchFuzzyBlockedImpl(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def matchFuzzyBlockedImpl(spark: SparkSession, dir: String): DataFrame = {
     val c = fuzzyBlockKeys(Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_name"),
         normName(col("c_name")).as("c_norm")), "c_norm")

@@ -990,6 +990,22 @@ object Olap {
         count(lit(1)).as("n_lines"))
   }
 
+  /** The build body of [[q20ExcessShare]]'s cached relation: shipped
+    * volume per (promo part, supplier), part-key partitioned.
+    */
+  private[graft] def q20PerPartSupp(spark: SparkSession, dir: String): DataFrame = {
+    val lo = lit("1996-01-01").cast("timestamp")
+    val hi = lit("1998-01-01").cast("timestamp")
+    val p = Tables.part(spark, dir)
+      .filter(col("p_type") === "PROMO").select("p_partkey")
+    Tables.lineitem(spark, dir)
+      .filter(col("l_shipdate") >= lo && col("l_shipdate") < hi)
+      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
+      .repartition(col("p_partkey"))
+      .groupBy("p_partkey", "l_suppkey")
+      .agg(sum("l_quantity").as("supp_qty"))
+  }
+
   /** Dominant suppliers of promo parts — the TPC-H Q20 shape
     * (nested IN subqueries): per-(part, supplier) shipped volume,
     * per-part totals REGROUPED from that aggregate (never a second
@@ -1000,17 +1016,8 @@ object Olap {
     * integral, so the half-share comparison is exact.
     */
   def q20ExcessShare(spark: SparkSession, dir: String): DataFrame = {
-    val lo = lit("1996-01-01").cast("timestamp")
-    val hi = lit("1998-01-01").cast("timestamp")
-    val p = Tables.part(spark, dir)
-      .filter(col("p_type") === "PROMO").select("p_partkey")
     val perPS = graft.PlanCache.cached("q20_per_part_supp", spark, dir) {
-      Tables.lineitem(spark, dir)
-        .filter(col("l_shipdate") >= lo && col("l_shipdate") < hi)
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .repartition(col("p_partkey"))
-        .groupBy("p_partkey", "l_suppkey")
-        .agg(sum("l_quantity").as("supp_qty"))
+      q20PerPartSupp(spark, dir)
     }
     val perPart = perPS.groupBy("p_partkey").agg(sum("supp_qty").as("part_qty"))
     val dominant = perPS.join(perPart, "p_partkey")

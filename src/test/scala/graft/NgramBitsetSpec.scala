@@ -35,7 +35,8 @@ class NgramBitsetSpec extends SparkSpec {
   }
 
   test("plan uses the native expression, not the HOF pipeline") {
-    val p = operators.Dedup.ngramJaccardScores(spark, sf)
+    // the bitsets are a PlanCache build: pin the expression on its body
+    val p = operators.Dedup.ngramBitsets(spark, sf)
       .queryExecution.analyzed.toString
     assert(p.contains("graft_ngram_bitset"),
       "bitset build must ride the native one-pass expression")

@@ -17,18 +17,6 @@ class PersistSiteSpec extends AnyFunSuite {
   private val forbidden =
     """\.persist\(|\.cache\(\)|localCheckpoint\(|\.checkpoint\(""".r
 
-  /** The line with any `//` comment cut off; blank for a line inside a
-    * block or doc comment.
-    */
-  private def code(line: String): String = {
-    val t = line.trim
-    if (t.startsWith("*") || t.startsWith("/*")) ""
-    else t.indexOf("//") match {
-      case -1 => t
-      case i => t.take(i)
-    }
-  }
-
   private def offenders(root: Path): Seq[(Path, Int, String)] = {
     val files = Files.walk(root).iterator.asScala
       .filter(p => p.toString.endsWith(".scala"))
@@ -37,7 +25,7 @@ class PersistSiteSpec extends AnyFunSuite {
     for {
       f <- files
       (line, i) <- Files.readAllLines(f).asScala.toSeq.zipWithIndex
-      if forbidden.findFirstIn(code(line)).isDefined
+      if forbidden.findFirstIn(SourceCode.code(line)).isDefined
     } yield (f, i + 1, line.trim)
   }
 

@@ -78,6 +78,34 @@ class PipelineSpec extends SparkSpec {
     assert(alerted.contains(("doomed_stage", "persistent stage failure")))
   }
 
+  test("stage rows come from the write and equal the published parquet's count") {
+    import org.apache.spark.sql.functions.{col, lit, udf}
+    val out = java.nio.file.Files.createTempDirectory("graft-rows").toString
+    val policy = Pipeline.StagePolicy(retries = 1)
+    def published(name: String): Long = spark.read.parquet(s"$out/$name").count()
+    val flat = Pipeline.runStageForTest(spark, out, policy)("flat",
+      Tables.lineitem(spark, sf).filter(col("l_quantity") > 10))
+    assert(flat.rows > 0 && flat.rows == published("flat"), flat.toString)
+    val parts = Pipeline.runStageForTest(spark, out, policy)("parts",
+      Tables.nation(spark, sf), Seq("n_regionkey"))
+    assert(parts.rows == Tables.nation(spark, sf).count() &&
+      parts.rows == published("parts"), parts.toString)
+    // the first attempt dies task-side, mid-write; the retry's count
+    // must be its own, not the failed attempt's
+    val boom = udf((k: Long) => { if (k >= 0) sys.error("disk full"); k })
+    Seq(Nil, Seq("n_regionkey")).foreach { partitionCols =>
+      var calls = 0
+      val name = s"retried_${partitionCols.size}"
+      val r = Pipeline.runStageForTest(spark, out, policy)(name, {
+        calls += 1
+        Tables.nation(spark, sf).withColumn("v",
+          if (calls == 1) boom(col("n_nationkey")) else lit(1L))
+      }, partitionCols)
+      assert(r.attempts == 2 && r.rows == parts.rows && r.rows == published(name),
+        r.toString)
+    }
+  }
+
   test("atomic stage publish: a crash mid-write keeps the prior artifact; re-run is exactly-once") {
     import org.apache.spark.sql.functions.{col, lit, udf}
     val out = java.nio.file.Files.createTempDirectory("graft-atomic").toString

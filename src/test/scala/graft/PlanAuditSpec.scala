@@ -34,7 +34,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("fuzzy match: supplier side broadcasts, no cartesian") {
-    val p = plan(operators.Matching.matchFuzzyBlocked(spark, sf))
+    // the match is a PlanCache build: pin the join on its body
+    val p = plan(operators.Matching.matchFuzzyBlockedImpl(spark, sf))
     assert(p.contains("BroadcastHashJoin"))
     assert(!p.contains("CartesianProduct"))
   }
@@ -87,8 +88,10 @@ class PlanAuditSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       // default regime: edge list fits the cap → the hint forces a
-      // map-side broadcast probe; the wedge stream never shuffles
-      val pB = plan(operators.Graph.graphTriangles(spark, sf))
+      // map-side broadcast probe; the wedge stream never shuffles.
+      // Under the default cap the per-node counts are a PlanCache
+      // build, so the probe is pinned on the build body
+      val pB = plan(operators.Graph.perNodeTrianglesImpl(spark, sf, 256L << 20))
       assert(pB.contains("BroadcastHashJoin"), "edge probe must broadcast under the cap")
       assert(!pB.contains("CartesianProduct"))
       // oversized regime: cap of 0 forces the fallback — the closing

@@ -5,10 +5,11 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** CI gate for PLANS.md coverage: a registered query without a plan
-  * head fails the audit, and the per-family heaviest (measured from
-  * the committed BENCH_FULL.json) must carry FULL formatted plans —
-  * the reviewable evidence behind the scale claims. Pure file checks,
-  * no Spark session.
+  * head fails the audit, and the per-family heaviest (measured by
+  * perfbench's full-registry sweep record, committed as
+  * BENCH_FULL.json) must carry FULL formatted plans — the reviewable
+  * evidence behind the scale claims. Pure file checks, no Spark
+  * session.
   */
 class PlanHeadsSpec extends AnyFunSuite {
 
