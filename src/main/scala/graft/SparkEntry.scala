@@ -1582,10 +1582,8 @@ object SparkEntry {
       s"""WITH $fuzzyBestCte
          |SELECT * FROM fuzzy_best ORDER BY c_custkey""".stripMargin,
 
-    // the default (heuristic) pair classifier is deterministic —
-    // pinned digit-for-digit to HeuristicPairClassifier — so the LLM
-    // CONTRACT query is fully oracle-expressible; only the remote
-    // BatchedPairClassifier seam stays spec-only
+    // the heuristic pair classifier is deterministic, so the LLM
+    // CONTRACT query is fully oracle-expressible
     "match_llm_stub" ->
       s"""WITH $fuzzyBestCte
          |SELECT c_custkey, s_suppkey,

@@ -354,9 +354,9 @@ object Dedup {
 
   /** 16-bit portable SimHash (md5-nibble bits, engine-agnostic
     * arithmetic): docs colliding on the full signature are near-dup
-    * candidates. A 64-bit native variant lives in
-    * graft.functions.SimHash64 for production use (tested in
-    * ScalaTest; this query keeps the DuckDB-checkable form).
+    * candidates. A 64-bit native variant is the SQL function
+    * `graft_simhash64` (graft.functions.SimHash64); this query keeps
+    * the DuckDB-checkable form.
     *
     * Hot-bucket cap (the mm_phash/star-components discipline): a
     * signature bucket with more than [[SimhashBucketCap]] members is

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Event-log operators: JSON extraction, tumbling-window rollups,
-  * gap sessionization, per-user ranking. These are the batch twins of
-  * graft.streaming — reference pipelines log per-stage events
+  * gap sessionization, per-user ranking. Reference pipelines log
+  * per-stage events
   * (dags/etl_pipeline.py get_stage_logger) and store quality metrics
   * per run; this generalizes that to an event-analytics surface.
   *
@@ -878,8 +878,7 @@ object Events {
           / col("n_rows").cast("double"), 6).as("skew_ratio"))
   }
 
-  /** Batch twin of the streaming CEP detector
-    * [[graft.streaming.EventStreams.conversionDetect]]: a purchase
+  /** Conversion detection (a CEP state machine): a purchase
     * converts the SAME user's most recent prior view within `windowS`
     * seconds, one credit per view. The sequential state machine
     * (view replaces pending; a qualifying purchase consumes it; any
@@ -889,8 +888,7 @@ object Events {
     * p AND p.ts - v.ts ≤ windowS — so the whole detector is two
     * IGNORE-NULLS running `last` windows (prior view, prior purchase)
     * over one user-partitioned sort, no self-join, no state. Bounded
-    * per-key window state at any scale; StreamingSpec pins this equal
-    * to the streaming detector replayed over the same events.
+    * per-key window state at any scale.
     */
   def eventsConversions(spark: SparkSession, dir: String): DataFrame =
     eventsConversions(spark, dir, windowS = 1800L)

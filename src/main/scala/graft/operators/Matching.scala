@@ -1161,8 +1161,7 @@ object Matching {
     * {match, confidence, reason} per candidate pair — driven by
     * transparent features instead of a model call. The default
     * classifier is deterministic, so this IS oracle-expressible
-    * (hash-gated since r8); only the remote BatchedPairClassifier
-    * seam stays spec-only.
+    * (hash-gated since r8).
     */
   def matchLlmStub(spark: SparkSession, dir: String): DataFrame = {
     val pairs = matchFuzzyBlocked(spark, dir)
@@ -1193,13 +1192,9 @@ object Matching {
     val edges = matchFuzzyBlocked(spark, dir)
       .select((col("c_custkey") * 2).as("src"),
         (col("s_suppkey") * 2 + 1).as("dst"))
-    // the fixpoint is a bounded per-matched-node relation and each
-    // propagation round is several jobs — cache the converged labels
-    // (already materialized, so stored as they are), not just the
-    // inputs, so repeated reads don't re-iterate
-    graft.PlanCache.cached("entity_canonical_labels", spark, dir) {
-      Dedup.labelPropagate(edges)
-    }
+    // labelPropagate returns its converged labels materialized; this
+    // query is their only reader
+    Dedup.labelPropagate(edges)
       .select(
         when(col("id") % 2 === 0, "customer").otherwise("supplier").as("node_type"),
         expr("id div 2").as("key"),

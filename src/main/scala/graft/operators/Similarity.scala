@@ -1447,12 +1447,10 @@ object Similarity {
       .select(col("vec_id"),
         posexplode(expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
           .as(Seq("pos", "x")))
-    val stats = graft.PlanCache.cached("whiten_stats", spark, dir) {
-      px.groupBy("pos").agg(
-        (sum("x") / count(lit(1))).as("mu"),
-        sqrt((sum(col("x") * col("x")) / count(lit(1))) -
-          (sum("x") / count(lit(1))) * (sum("x") / count(lit(1)))).as("sd"))
-    }
+    val stats = px.groupBy("pos").agg(
+      (sum("x") / count(lit(1))).as("mu"),
+      sqrt((sum(col("x") * col("x")) / count(lit(1))) -
+        (sum("x") / count(lit(1))) * (sum("x") / count(lit(1)))).as("sd"))
     px.filter(col("vec_id") < 10)
       .join(broadcast(stats), "pos")
       .select(col("vec_id"), col("pos"),

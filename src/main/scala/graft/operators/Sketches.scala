@@ -169,10 +169,7 @@ object Sketches {
 
   /** The CMS bucket derivation — d rows per input row, bucket = first
     * 2 md5 hex chars of "row|token" (a STRING key, so the oracle
-    * mirrors it with no numeric hex conversion). ONE definition
-    * shared by the batch sketch below and the streaming sketch
-    * (graft.streaming.EventStreams.cmsSketchStream): parity between
-    * the two is structural, not copy-paste.
+    * mirrors it with no numeric hex conversion).
     */
   def cmsBuckets(tokens: DataFrame, d: Int = 4): DataFrame =
     tokens

@@ -1309,18 +1309,20 @@ object TextAnalysis {
     * combined, key = the pair) and one broadcast 1-row rule joined
     * back onto the corpus for a lambda rewrite — no shuffle of the
     * corpus itself, and rounds are FIXED so the whole training run is
-    * one plan per round with the merged relation PlanCache-pinned
-    * (each round's output feeds both the next election and the next
-    * rewrite).
+    * one plan per round. The input and every merged relation but the
+    * last are PlanCache-pinned: each feeds both the next election and
+    * the next rewrite, while the last round's output feeds only its
+    * symbol count.
     */
   def bpeTrainRounds(spark: SparkSession, dir: String): DataFrame = {
     val rounds = 3
-    var cur = Tables.documents(spark, dir).select(toks.as("t"))
-      .filter(size(col("t")) >= 2)
+    var cur = graft.PlanCache.cached("bpe_sym_1", spark, dir) {
+      Tables.documents(spark, dir).select(toks.as("t"))
+        .filter(size(col("t")) >= 2)
+    }
     val reports = (1 to rounds).map { r =>
-      val pinned = graft.PlanCache.cached(s"bpe_sym_$r", spark, dir)(cur)
       val top = graft.functions.TopK.globalWithRank(
-        pinned
+        cur
           .select(explode(expr(
             "transform(sequence(1, size(t) - 1), " +
               "i -> struct(element_at(t, i) AS w1, element_at(t, i + 1) AS w2))"))
@@ -1329,21 +1331,22 @@ object TextAnalysis {
           .filter(col("w1") =!= col("w2"))
           .groupBy("w1", "w2").agg(count(lit(1)).as("cnt")),
         1, col("cnt").desc, col("w1"), col("w2")).drop("rank")
-      val merged = graft.PlanCache.cached(s"bpe_merged_$r", spark, dir) {
-        pinned.crossJoin(broadcast(top))
-          .select(expr(
-            // try_element_at: AND doesn't short-circuit in Spark SQL,
-            // so guarded element_at(t, 0) / element_at(t, n+1) would
-            // still throw under ANSI
-            """transform(
-              |  filter(sequence(1, size(t)), i ->
-              |    NOT (i > 1 AND try_element_at(t, i - 1) = w1
-              |         AND element_at(t, i) = w2)),
-              |  i -> IF(element_at(t, i) = w1 AND i < size(t)
-              |          AND try_element_at(t, i + 1) = w2,
-              |        concat(w1, '@@', w2), element_at(t, i)))""".stripMargin)
-            .as("t"))
-      }
+      val rewrite = cur.crossJoin(broadcast(top))
+        .select(expr(
+          // try_element_at: AND doesn't short-circuit in Spark SQL,
+          // so guarded element_at(t, 0) / element_at(t, n+1) would
+          // still throw under ANSI
+          """transform(
+            |  filter(sequence(1, size(t)), i ->
+            |    NOT (i > 1 AND try_element_at(t, i - 1) = w1
+            |         AND element_at(t, i) = w2)),
+            |  i -> IF(element_at(t, i) = w1 AND i < size(t)
+            |          AND try_element_at(t, i + 1) = w2,
+            |        concat(w1, '@@', w2), element_at(t, i)))""".stripMargin)
+          .as("t"))
+      val merged =
+        if (r < rounds) graft.PlanCache.cached(s"bpe_merged_$r", spark, dir)(rewrite)
+        else rewrite
       val after = merged.agg(sum(size(col("t"))).cast("long").as("corpus_symbols"))
       val report = top.crossJoin(broadcast(after))
         .select(lit(r.toLong).as("round"),

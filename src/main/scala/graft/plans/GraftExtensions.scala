@@ -24,6 +24,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.jaroFn)
     ext.injectFunction(GraftExtensions.kmvFn)
     ext.injectFunction(GraftExtensions.hllFn)
+    ext.injectFunction(GraftExtensions.simhashFn)
     ext.injectOptimizerRule(_ => SelfDotToNormSquared)
     ext.injectPlannerStrategy(_ => TopKStrategy)
     ext.injectPlannerStrategy(_ => AsofStrategy)
@@ -38,7 +39,7 @@ object GraftExtensions {
     */
   def registerInto(spark: org.apache.spark.sql.SparkSession): Unit = {
     import org.apache.spark.sql.graftshim.GraftShim
-    Seq(dotFn, bitsetFn, hexFn, scatterFn, jaroFn, kmvFn, hllFn).foreach { case (id, i, b) =>
+    Seq(dotFn, bitsetFn, hexFn, scatterFn, jaroFn, kmvFn, hllFn, simhashFn).foreach { case (id, i, b) =>
       GraftShim.registerFunction(spark, id, i, b)
     }
     if (!spark.experimental.extraOptimizations.contains(SelfDotToNormSquared)) {
@@ -115,6 +116,12 @@ object GraftExtensions {
     info("graft_hll_distinct",
       "graft_hll_distinct(hash) - HLL(p=8) approximate distinct count over 56-bit graft_hex_long(md5(x), 14) hashes (256-byte register state)"),
     (args: Seq[Expression]) => graft.functions.HllSketchAgg(args(0)))
+
+  val simhashFn: (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder) = (
+    FunctionIdentifier("graft_simhash64"),
+    info("graft_simhash64",
+      "graft_simhash64(tokens) - 64-bit SimHash of an array<string> as a BIGINT (near-dups differ in few bits)"),
+    (args: Seq[Expression]) => graft.functions.SimHash64Expr(args(0)))
 
   /** Hard cap on the per-row dense array (4M doubles = 32 MB/row) —
     * anything wider is a mis-sized vocabulary, not a real vector.

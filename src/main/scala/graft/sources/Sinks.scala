@@ -288,8 +288,7 @@ object Sinks {
               schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
 
-  /** CSV ingestion with a quarantine lane (the CSV twin of
-    * JsonSources): lines are read as text and parsed with from_csv
+  /** CSV ingestion with a quarantine lane: lines are read as text and parsed with from_csv
     * in PERMISSIVE mode against the explicit schema — malformed rows
     * neither crash the load (FAILFAST) nor vanish (DROPMALFORMED);
     * their RAW BYTES land in [[csvQuarantine]] for triage. Parsing

@@ -30,6 +30,12 @@ class ExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(r == Seq(0.0, 5.0, 0.0, 7.0))
   }
 
+  test("graft_simhash64 is callable from SQL and matches the reference") {
+    val r = spark.sql(
+      "SELECT graft_simhash64(array('near', 'dup', 'doc')) AS h").head.getLong(0)
+    assert(r == graft.functions.SimHash64.ofTokens(Iterator("near", "dup", "doc")))
+  }
+
   test("graft_dense_scatter rejects out-of-range lengths at resolution time") {
     // a negative length would NPE/NegativeArraySize per ROW at eval;
     // a huge one allocates gigabytes per row — both must fail once,
