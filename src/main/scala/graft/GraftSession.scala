@@ -31,31 +31,6 @@ object GraftSession {
       // the injection on local data).
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
 
-  /** Builder preset for a REAL cluster, same plans as [[builder]]:
-    * call with the job's total executor cores. Encodes the sizing
-    * rules the local configs only gesture at —
-    * `shuffle.partitions` = 3× total cores (AQE coalesces the
-    * overshoot; undershoot can't be fixed at runtime and serializes
-    * the biggest shuffles), 128 MiB scan splits and ~64 MiB AQE
-    * advisory partitions (large enough to amortize task overhead,
-    * small enough that a skewed partition still fits executor
-    * memory next to the page cache). Deliberately does NOT set
-    * master/memory — those belong to the submit layer.
-    */
-  def clusterBuilder(totalCores: Int): SparkSession.Builder =
-    SparkSession.builder()
-      .config("spark.sql.shuffle.partitions", (totalCores * 3).toString)
-      .config("spark.sql.files.maxPartitionBytes", (128L << 20).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (64L << 20).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-
   def local(cpus: Int = Runtime.getRuntime.availableProcessors): SparkSession = {
     val s = builder(s"local[$cpus]", math.max(cpus, 4)).getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -46,14 +46,13 @@ object Pipeline {
         // re-read: one Observation per attempt, read once _SUCCESS is in
         val written = new Observation()
         val out = df.observe(written, count(lit(1)).as("rows"))
-        // ATOMIC publish (the incrementalAggregate rename discipline):
-        // every attempt writes to a staging dir and only a COMPLETE
-        // write (_SUCCESS present) is renamed over the live path — a
-        // crash mid-write leaves the previous successful artifact
-        // untouched, so an orchestrator's at-least-once re-run of the
-        // stage is exactly-once on the published output. A direct
-        // mode("overwrite") to the live path would truncate it first
-        // and a mid-write crash would destroy the prior artifact.
+        // ATOMIC publish: every attempt writes to a staging dir and
+        // only a COMPLETE write (_SUCCESS present) is renamed over the
+        // live path — a crash mid-write leaves the previous successful
+        // artifact untouched, so an orchestrator's at-least-once re-run
+        // of the stage is exactly-once on the published output. A
+        // direct mode("overwrite") to the live path would truncate it
+        // first and a mid-write crash would destroy the prior artifact.
         val live = new org.apache.hadoop.fs.Path(s"$outDir/$name")
         val stg = new org.apache.hadoop.fs.Path(s"$outDir/_stg_$name")
         val old = new org.apache.hadoop.fs.Path(s"$outDir/_old_$name")

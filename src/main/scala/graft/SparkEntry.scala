@@ -6,9 +6,9 @@ import graft.operators._
 /** Driver contract — see /root/repo/SURVEY.md §2 + the builder prompt.
   *
   * Every `queries` entry has a matching `oracleSql` entry (ANSI SQL in
-  * DuckDB dialect over the same parquet tables) unless the operator is
-  * not SQL-expressible; column names and deterministic orderings are
-  * kept identical on both sides so the driver's hash compare is exact.
+  * DuckDB dialect over the same parquet tables); column names and
+  * deterministic orderings are kept identical on both sides so the
+  * oracle's hash compare is exact.
   */
 object SparkEntry {
 
@@ -400,14 +400,6 @@ object SparkEntry {
     "graph_degree_gini" -> (Graph.graphDegreeGini _),
     "events_levene_variance" -> (Events.eventsLeveneVariance _),
   )
-
-  /** Queries intentionally without a SQL oracle (driver falls back to
-    * the weaker rows-only check); kept in sync with OperatorsSpec.
-    * Empty since r10: mm_fake_decode — the last rows-only entry — is
-    * oracle-checkable because the corpus text is ASCII, so the decode
-    * stand-in's byte features are exactly DuckDB's per-char ord sums.
-    */
-  val noOracle: Set[String] = Set.empty
 
   /** clean_abr's shaped+filtered relation, shared by several oracles. */
   private val abrCleanedCte: String =

@@ -9,10 +9,6 @@ import org.apache.spark.sql.types.{LongType, TimestampType, TimestampNTZType}
   * through here so schemas and paths stay in one place.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, dir: String, table: String): DataFrame =
     spark.read.parquet(s"$dir/$table.parquet")
 

@@ -1,18 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Production 64-bit SimHash over a token array, as a native
   * expression: one pass per row, no explode, no shuffle — each
   * token hashes to 64 bits and votes ±1 per bit position; the sign
   * vector packs into one BIGINT. Near-duplicate candidates are rows
-  * whose simhashes differ in ≤ k bits (see hamming64).
+  * whose simhashes differ in ≤ k bits. Registered as the SQL
+  * function `graft_simhash64` (graft.plans.GraftExtensions).
   *
   * The 16-bit md5-nibble variant in operators.Dedup.dedupSimhash
   * stays the DuckDB-checkable form; this one is the scale path
@@ -89,11 +88,4 @@ object SimHash64 {
     while (b < 64) { if (votes(b) > 0) sig |= (1L << b); b += 1 }
     sig
   }
-
-  def simhash64(tokens: Column): Column =
-    GraftShim.column(SimHash64Expr(GraftShim.expression(tokens)))
-
-  /** Hamming distance between two 64-bit signatures. */
-  def hamming64(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.bit_count(a.bitwiseXOR(b))
 }

@@ -21,24 +21,4 @@ object Skew {
     val r = right.withColumn("_salt", explode(expr(s"sequence(0, ${salts - 1})")))
     l.join(r, keys :+ "_salt").drop("_salt")
   }
-
-  /** Two-phase count-distinct for skewed keys. Algebraic aggregates
-    * (sum/count/min/max) partial-aggregate map-side, so key skew
-    * barely hurts them — but countDistinct must co-locate every
-    * distinct value of a key in ONE task, and a hot key's value set
-    * can exceed an executor. Phase 1 splits each key's value space
-    * deterministically by value-hash into `salts` shards and counts
-    * distinct per shard (each shard holds a disjoint value subset, so
-    * counts add exactly); phase 2 sums the shard counts. Exact, not a
-    * sketch — the memory per task drops by `salts`×.
-    */
-  def saltedCountDistinct(df: DataFrame, keys: Seq[String], value: Column,
-                          salts: Int, out: String = "n_distinct"): DataFrame = {
-    val keyCols = keys.map(col)
-    df.withColumn("_vshard", pmod(hash(value), lit(salts)))
-      .groupBy(keyCols :+ col("_vshard"): _*)
-      .agg(countDistinct(value).as("_part"))
-      .groupBy(keyCols: _*)
-      .agg(sum("_part").as(out))
-  }
 }

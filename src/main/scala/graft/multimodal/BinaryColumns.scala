@@ -91,38 +91,6 @@ object BinaryColumns {
       (s, head, tail)
     }
 
-    /** REAL image decode via `javax.imageio` (JDK-bundled — no
-      * external media library needed for PNG/JPEG/BMP/GIF): payload
-      * bytes → `[width, height, mean_r, mean_g, mean_b]` with channel
-      * means in [0,1], sampled on a ≤64×64 grid so per-item cost is
-      * bounded regardless of source resolution. This is the feature
-      * contract the fake decoder stands in for on non-image payloads;
-      * MultimodalSpec round-trips a generated PNG through the same
-      * mapPartitions pipeline shape as [[fakeDecodeFeatures]].
-      */
-    def decodeImageReal(payload: Array[Byte]): Array[Float] = {
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(payload))
-      require(img != null, "payload is not a decodable image")
-      val w = img.getWidth
-      val h = img.getHeight
-      val sx = math.max(1, w / 64)
-      val sy = math.max(1, h / 64)
-      var r = 0L; var g = 0L; var b = 0L; var n = 0
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val p = img.getRGB(x, y)
-          r += (p >> 16) & 0xff; g += (p >> 8) & 0xff; b += p & 0xff
-          n += 1; x += sx
-        }
-        y += sy
-      }
-      Array(w.toFloat, h.toFloat,
-        r.toFloat / n / 255f, g.toFloat / n / 255f, b.toFloat / n / 255f)
-    }
-
     /** REAL perceptual hash — the average-hash (aHash) kernel the
       * md5-prefix stand-in in [[BinaryColumns.phashBuckets]] is a
       * placeholder for: decode via `javax.imageio`, box-pool the
@@ -176,10 +144,6 @@ object BinaryColumns {
       bits
     }
   }
-
-  /** Per-image 64-bit average-hash row ([[FakeDecoder.averageHash64]]
-    * contract). */
-  case class ImageHash(media_id: Long, ahash64: Long)
 
   /** 64 gray levels sampled from a document's text — the pixel values
     * of the generated-image corpus ([[docPng]]) AND the oracle-replay
@@ -263,37 +227,6 @@ object BinaryColumns {
             (id, FakeDecoder.averageHash64(docPng(text)) & ((1L << 48) - 1))
           }
         }.toDF("doc_id", "h48")
-    }
-  }
-
-  /** Partition-parallel REAL perceptual hashing over a media Dataset —
-    * same batch shape as [[realDecodeImageFeatures]] (one ImageIO
-    * pass per partition, payloads never leave the executor); feed the
-    * output straight into [[phashBuckets]]-style 4-band LSH banding.
-    */
-  def imageAverageHashes(ds: Dataset[MediaRow]): Dataset[ImageHash] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { rows =>
-      rows.map(r => ImageHash(r.media_id, FakeDecoder.averageHash64(r.payload)))
-    }
-  }
-
-  /** per-image decoded features (decodeImageReal contract). */
-  case class ImageFeatures(media_id: Long, width: Int, height: Int,
-                           mean_r: Float, mean_g: Float, mean_b: Float)
-
-  /** Partition-parallel REAL image decode over a media Dataset — the
-    * same batch shape as [[fakeDecodeFeatures]] (one decoder pass per
-    * partition, no driver transfer), but through `javax.imageio` on
-    * actual encoded image bytes.
-    */
-  def realDecodeImageFeatures(ds: Dataset[MediaRow]): Dataset[ImageFeatures] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { rows =>
-      rows.map { r =>
-        val f = FakeDecoder.decodeImageReal(r.payload)
-        ImageFeatures(r.media_id, f(0).toInt, f(1).toInt, f(2), f(3), f(4))
-      }
     }
   }
 
@@ -402,17 +335,6 @@ object BinaryColumns {
         substring(md5(col("frame")), 1, 16).as("frame_sig"))
       .orderBy("media_id", "frame_idx")
 
-  /** File-in multimodal ingestion: a directory of raw media files read
-    * through Spark's `binaryFile` source into the SAME (media_id,
-    * payload, mime, n_bytes, content_hash) schema [[asMedia]] produces
-    * from a table column — so every downstream stage (decode, frame
-    * sample, resize) is storage-agnostic. The source streams file
-    * bytes split-per-file (a 100 TB image corpus parallelizes by
-    * file count), prunes on metadata (path/length/modificationTime
-    * are ordinary pushable columns), and never materializes a file
-    * list on the driver. media_id is a content-independent hash of
-    * the file path — stable across re-ingestion runs.
-    */
   /** Training-pair curation (the LAION-style text↔media↔embedding
     * gate): every document joined to its media payload (the text
     * bytes stand in for the decoded asset, as across this module)
@@ -504,21 +426,6 @@ object BinaryColumns {
         (col("n_items") % 32).as("n_remainder"),
         col("min_ratio_milli"), col("max_ratio_milli"))
       .orderBy("bucket_id")
-  }
-
-  def readMediaFiles(spark: SparkSession, pathGlob: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select(
-        xxhash64(col("path")).as("media_id"),
-        col("content").as("payload"),
-        when(col("path").endsWith(".png"), "image/png")
-          .when(col("path").endsWith(".jpg"), "image/jpeg")
-          .when(col("path").endsWith(".wav"), "audio/wav")
-          .otherwise("application/octet-stream").as("mime"),
-        col("length").as("n_bytes"),
-        md5(col("content")).as("content_hash"))
-      .as[MediaRow]
   }
 
   /** Perceptual-hash banding diagnostics — the image-near-dup LSH

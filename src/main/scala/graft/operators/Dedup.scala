@@ -236,25 +236,14 @@ object Dedup {
       .orderBy("i", "j")
   }
 
-  /** Build and persist the corpus MinHash index — bands sorted by
-    * (band_idx, band_val) so probe scans row-group-prune on the band
-    * value, plus the shingle arrays the verify step needs. The dedup
-    * twin of [[Similarity.buildIvfIndex]]: the corpus side of
-    * near-dup detection is paid ONCE, not on every incoming batch.
-    */
-  def buildDedupIndex(spark: SparkSession, dir: String, indexPath: String): Unit = {
-    graft.sources.Sinks.writeSortedForPruning(
-      minhashBands(spark, dir), s"$indexPath/bands", Seq("band_idx", "band_val"))
-    minhashShingles(spark, dir).write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$indexPath/shingles")
-  }
-
-  /** Build the index from an arbitrary (doc_id, text) relation — the
-    * form a pipeline uses when the accumulated history is not the
-    * whole `documents` table. The shingles are materialized for the
-    * duration of the build so the band cut and the shingle write
-    * share one tokenization pass.
+  /** Build and persist a MinHash index over a (doc_id, text)
+    * relation — bands sorted by (band_idx, band_val) so probe scans
+    * row-group-prune on the band value, plus the shingle arrays the
+    * verify step needs. The dedup twin of [[Similarity.buildIvfIndex]]:
+    * the corpus side of near-dup detection is paid ONCE, not on every
+    * incoming batch. The shingles are materialized for the duration of
+    * the build so the band cut and the shingle write share one
+    * tokenization pass.
     */
   def buildDedupIndex(spark: SparkSession, indexPath: String,
                       corpus: DataFrame): Unit = {
@@ -267,47 +256,16 @@ object Dedup {
     } finally graft.PlanCache.release(sh)
   }
 
-  /** Incremental dedup: near-dup pairs (batch doc i, corpus doc j,
-    * jaccard ≥ 0.8) of a NEW batch against a stored corpus index —
-    * bands and shingles are computed only for the batch (O(batch)),
-    * the corpus side comes off the index built by
-    * [[buildDedupIndex]]. This is how dedup runs in production: the
-    * corpus is the accumulated history, each ingestion batch probes
-    * it, and accepted docs' bands are appended — never recompute the
-    * history. Candidates are the same banded equi-join as
-    * [[dedupMinhashLsh]], so batch-vs-corpus results match a
-    * monolithic run on the union restricted to crossing pairs.
-    */
-  def dedupAgainstIndex(spark: SparkSession, indexPath: String,
-                        batch: DataFrame): DataFrame =
-    // materialized, not cached: the batch is a caller-supplied
-    // relation with no stable (dir)-style cache key, and shB feeds
-    // BOTH the band computation and the verify side — otherwise the
-    // whole batch tokenizes twice. PlanCache.clear() frees the blocks.
-    probeDedupIndex(spark, indexPath,
-      graft.PlanCache.materialize(shinglesOf(batch)))
-
-  private def probeDedupIndex(spark: SparkSession, indexPath: String,
-                              shB: DataFrame): DataFrame = {
-    val bandsB = bandsOf(shB)
-      .select(col("doc_id").as("i"), col("band_idx"), col("band_val"))
-    val bandsC = spark.read.parquet(s"$indexPath/bands")
-      .select(col("doc_id").as("j"), col("band_idx"), col("band_val"))
-    val cand = bandsB.join(bandsC, Seq("band_idx", "band_val"))
-      .select("i", "j").distinct()
-    verifyJaccard(shB, cand, spark.read.parquet(s"$indexPath/shingles"))
-  }
-
   /** The persisted-index lifecycle as a REGISTERED query: the corpus
     * slice (doc_id % 10 ≠ 0) is indexed ONCE into a fingerprinted
     * tmp location (the [[Similarity.ensureIndex]] staging-rename
     * protocol, keyed to documents.parquet so a regenerated corpus
     * forces a rebuild), and the batch slice (doc_id % 10 = 0) probes
-    * the STORED bands/shingles through [[dedupAgainstIndex]] — so
-    * the driver's oracle gate exercises the actual on-disk index
-    * path, not an in-memory shortcut. The oracle is the monolithic
-    * run restricted to crossing pairs, which IndexSpec already pins
-    * equal to this composition.
+    * the STORED bands/shingles: bands and shingles are computed only
+    * for the batch, and the candidates are the same banded equi-join
+    * as [[dedupMinhashLsh]] — so the oracle gate exercises
+    * the actual on-disk index path, not an in-memory shortcut. The
+    * oracle is the monolithic run restricted to crossing pairs.
     */
   def dedupIndexProbe(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
@@ -315,14 +273,20 @@ object Dedup {
       stage => buildDedupIndex(spark, stage,
         docs.filter(col("doc_id") % 10 =!= 0)),
       srcFile = "documents.parquet")
-    // batch shingles cached under a PlanCache key, NOT
-    // dedupAgainstIndex's one-off materialize: a registered query
-    // re-runs (bench reps, verify), and each call would hold a fresh
-    // copy of the batch shingles until clear(). The key dedupes reps.
+    // batch shingles cached under a PlanCache key, not a one-off
+    // materialize: a registered query re-runs (bench reps, verify),
+    // and each call would hold a fresh copy of the batch shingles
+    // until clear(). The key dedupes reps.
     val shB = graft.PlanCache.cached("mhidx_batch_shingles", spark, dir) {
       shinglesOf(docs.filter(col("doc_id") % 10 === 0))
     }
-    probeDedupIndex(spark, idx, shB)
+    val bandsB = bandsOf(shB)
+      .select(col("doc_id").as("i"), col("band_idx"), col("band_val"))
+    val bandsC = spark.read.parquet(s"$idx/bands")
+      .select(col("doc_id").as("j"), col("band_idx"), col("band_val"))
+    val cand = bandsB.join(bandsC, Seq("band_idx", "band_val"))
+      .select("i", "j").distinct()
+    verifyJaccard(shB, cand, spark.read.parquet(s"$idx/shingles"))
   }
 
   /** Cross-split eval-leakage gate: TEST-split documents whose

@@ -95,19 +95,6 @@ object Governance {
   case class Expectation(table: String, column: String, test: String,
                          params: Seq[String] = Nil)
 
-  /** Parse a declarative expectation table — (table_name, column_name,
-    * test, params CSV) rows, e.g. read from a config CSV/parquet —
-    * into rules for [[dqExpectationsFrom]]. Config tables are tiny by
-    * definition; collecting them on the driver is the correct plan.
-    */
-  def parseRules(config: DataFrame): Seq[Expectation] =
-    config.select("table_name", "column_name", "test", "params")
-      .collect().toSeq.map { r =>
-      Expectation(r.getString(0), r.getString(1), r.getString(2),
-        Option(r.getString(3)).filter(_.nonEmpty)
-          .map(_.split(",").toSeq.map(_.trim)).getOrElse(Nil))
-    }
-
   /** Config-DRIVEN expectation suite — the dbt schema.yml parity
     * feature: the checks come from data, not code, so a new column
     * test is a config row, not a deploy. Emits the same report shape

@@ -436,9 +436,8 @@ object Olap {
 
   /** CDC merge-apply: collapse a keyed change stream to its final
     * snapshot with delete-tombstone semantics — the Delta/Iceberg
-    * MERGE compaction shape, and the batch twin of
-    * [[graft.sources.Sinks.upsertLatestWins]] (reference
-    * loadingcsv_topostgre_fast.py ON CONFLICT upserts). Orders stand
+    * MERGE compaction shape, and graft's form of the reference's
+    * loadingcsv_topostgre_fast.py ON CONFLICT upsert. Orders stand
     * in as the change log: key = customer, change sequence =
     * (order date, order key), op = D when the order is finalized
     * ('F' status — the tombstone), else U carrying the price payload.

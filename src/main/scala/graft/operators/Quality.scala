@@ -115,32 +115,6 @@ object Quality {
       .orderBy("doc_id")
   }
 
-  /** In-flight pipeline observability via `Dataset.observe`: the
-    * cleaning pass carries its own quality counters (rows seen, key
-    * nulls, invalid keys, negative balances) as a CollectMetrics node
-    * INSIDE the plan — the metrics materialize as a side effect of
-    * whatever action the caller already runs, with NO second scan of
-    * the input (a separate metrics query would re-read the table; at
-    * 100 TB that doubles the job). Returns the instrumented frame +
-    * the Observation handle; `obs.get` blocks until the first action
-    * completes. The streaming twin is query-progress
-    * `observedMetrics` — same plan node, same counters.
-    */
-  def observedClean(spark: SparkSession, dir: String):
-      (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation("clean_quality")
-    val c = Tables.customer(spark, dir)
-    val instrumented = c.observe(obs,
-      count(lit(1)).as("rows_seen"),
-      sum(when(col("c_custkey").isNull, 1L).otherwise(0L)).as("null_keys"),
-      sum(when(!col("c_mktsegment").rlike("^[A-Z]+$"), 1L).otherwise(0L))
-        .as("invalid_segments"),
-      sum(when(col("c_acctbal") < 0, 1L).otherwise(0L)).as("negative_balances"))
-      .filter(col("c_acctbal") >= 0)
-      .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
-    (instrumented, obs)
-  }
-
   /** ANALYZE-style table profile of the orders table: per column, row
     * count, null count, exact distinct count, and numeric min/max —
     * the statistics a warehouse gathers to drive join planning and

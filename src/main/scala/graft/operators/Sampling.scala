@@ -300,24 +300,16 @@ object Sampling {
   def sampleShardShuffle(spark: SparkSession, dir: String,
                          shards: Int = 8): DataFrame = {
     val w = Window.partitionBy("shard").orderBy(col("u"), col("doc_id"))
-    shardAssign(Tables.documents(spark, dir), shards)
+    // content-salted uniform hash, shard = ⌊u·S⌋
+    Tables.documents(spark, dir)
+      .withColumn("u", graft.functions.HexExprs.uniformHash(
+        concat(col("text"), lit("#shuffle"))))
+      .withColumn("shard", floor(col("u") * shards).cast("int"))
       .withColumn("pos", row_number().over(w))
       .select(col("doc_id"), col("shard"), col("pos"),
         round(col("u"), 6).as("u"))
       .orderBy("shard", "pos")
   }
-
-  /** The shard assignment shared by the registered query (above,
-    * which adds positions and a global orderBy for ORACLE determinism
-    * only) and the production writer
-    * [[graft.sources.Sinks.writeShards]] (which must NOT pay any
-    * global sort): content-salted uniform hash, shard = ⌊u·S⌋.
-    */
-  private[graft] def shardAssign(docs: DataFrame, shards: Int): DataFrame =
-    docs
-      .withColumn("u", graft.functions.HexExprs.uniformHash(
-        concat(col("text"), lit("#shuffle"))))
-      .withColumn("shard", floor(col("u") * shards).cast("int"))
 
   /** SOFT deduplication: instead of electing one canonical member per
     * exact-duplicate family (hard dedup, [[graft.operators.Dedup]]),

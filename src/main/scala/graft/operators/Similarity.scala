@@ -96,17 +96,8 @@ object Similarity {
     * analog of the reference loader's build-once CREATE INDEX step,
     * loadingcsv_topostgre_optimized.py optimize_table).
     */
-  def buildIvfIndex(spark: SparkSession, dir: String, indexPath: String): Unit =
-    buildIvfIndexFrom(vecsWithNorm(spark, dir), indexPath)
-
-  /** [[buildIvfIndex]] from an arbitrary (vec_id, label, v, norm)
-    * relation — the form append-maintenance rebuilds go through.
-    * Alongside centroids and lists, PER-CELL SUFFICIENT STATISTICS
-    * (count + element-wise sum) are persisted: they are what lets
-    * [[appendIvfIndex]] refresh centroids in O(batch + nlist·d)
-    * instead of re-reading the corpus.
-    */
-  def buildIvfIndexFrom(e: DataFrame, indexPath: String): Unit = {
+  def buildIvfIndex(spark: SparkSession, dir: String, indexPath: String): Unit = {
+    val e = vecsWithNorm(spark, dir)
     ivfCentroids(e).write
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$indexPath/centroids")
@@ -114,145 +105,6 @@ object Similarity {
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("label")
       .parquet(s"$indexPath/lists")
-    ivfStats(e).write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$indexPath/stats")
-  }
-
-  /** Per-cell (count, element-wise sum) — centroid = sv/n. */
-  private def ivfStats(e: DataFrame): DataFrame =
-    e.select(col("label"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy("label", "pos").agg(sum("x").as("sx"), count(lit(1)).as("nx"))
-      .groupBy("label")
-      .agg(expr("transform(sort_array(collect_list(struct(pos, sx))), s -> s.sx)")
-        .as("sv"), max("nx").as("n"))
-
-  private def centroidsFromStats(stats: DataFrame): DataFrame =
-    stats.select(col("label"),
-      expr("transform(sv, x -> x / CAST(n AS DOUBLE))").as("cv"))
-
-  case class IvfAppendReport(drift: Double, rebuilt: Boolean, newCells: Long)
-
-  /** APPEND-batch maintenance for the persisted IVF index — the
-    * build-once story completed: new vectors route to their existing
-    * cells (cell = the label coarse key, so routing is the partition
-    * write itself), the cell centroids refresh EXACTLY from merged
-    * sufficient statistics, and a CENTROID-DRIFT metric — the worst
-    * per-cell angular displacement `1 − cos(old, refreshed)` — decides
-    * whether the in-place append still represents the data or the
-    * index must re-quantize: drift ≤ `rebuildAtDrift` appends in
-    * place (O(batch)); above it the lists and batch union-rebuild from
-    * scratch. Either way IndexSpec pins the post-append probe equal to
-    * a rebuild-from-scratch probe on the union.
-    *
-    * Ordering: refreshed stats/centroids are STAGED before the lists
-    * append, then swapped after it — a crash mid-append leaves stale
-    * (pre-batch) statistics and a partially appended list, which a
-    * rebuild repairs; nothing already indexed is ever lost.
-    */
-  /** Shared append-time bookkeeping: merged per-cell statistics, the
-    * refreshed centroids, the worst-cell drift `1 − cos(old, new)`,
-    * and how many cells the batch introduces.
-    */
-  private case class StatsRefresh(merged: DataFrame, newCents: DataFrame,
-                                  drift: Double, newCells: Long)
-
-  private def refreshStats(spark: SparkSession, indexPath: String,
-                           b: DataFrame): StatsRefresh = {
-    recoverSwap(spark, indexPath, "stats")
-    recoverSwap(spark, indexPath, "centroids")
-    val oldStats = spark.read.parquet(s"$indexPath/stats")
-    val bStats = ivfStats(b)
-    val merged = oldStats.select(col("label"), col("sv").as("osv"), col("n").as("on"))
-      .join(bStats.select(col("label"), col("sv").as("bsv"), col("n").as("bn")),
-        Seq("label"), "full_outer")
-      .select(col("label"),
-        expr("""CASE WHEN osv IS NULL THEN bsv WHEN bsv IS NULL THEN osv
-               | ELSE zip_with(osv, bsv, (a, b) -> a + b) END""".stripMargin).as("sv"),
-        (coalesce(col("on"), lit(0L)) + coalesce(col("bn"), lit(0L))).as("n"))
-    val newCents = centroidsFromStats(merged)
-    val driftRow = spark.read.parquet(s"$indexPath/centroids")
-      .select(col("label"), col("cv").as("ocv"))
-      .join(newCents.select(col("label"), col("cv").as("ncv")), "label")
-      .select((lit(1.0) -
-        graft.functions.VectorExprs.dot(col("ocv"), col("ncv")) /
-          (graft.functions.Vectors.normHof("ocv") *
-           graft.functions.Vectors.normHof("ncv"))).as("d"))
-      .agg(max("d")).head()
-    val drift = if (driftRow.isNullAt(0)) 0.0 else driftRow.getDouble(0)
-    StatsRefresh(merged, newCents, drift,
-      bStats.join(oldStats, Seq("label"), "left_anti").count())
-  }
-
-  /** Crash-safe stage→live publish: rename(live→.old),
-    * rename(stage→live), delete(.old) — the
-    * [[graft.sources.Sinks.incrementalAggregate]] discipline. At no
-    * point is the index without a recoverable copy: a crash before
-    * the second rename leaves the pre-append table in `.old`, which
-    * [[recoverSwap]] restores before the next read (the append's
-    * at-least-once contract then re-folds the batch — the same
-    * reasoning as incrementalAggregate's trash-first recovery).
-    */
-  private def swapIn(spark: SparkSession, indexPath: String,
-                     stage: String, live: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val liveP = new org.apache.hadoop.fs.Path(s"$indexPath/$live")
-    val oldP = new org.apache.hadoop.fs.Path(s"$indexPath/$live.old")
-    fs.delete(oldP, true)
-    if (fs.exists(liveP)) fs.rename(liveP, oldP)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$indexPath/$stage"), liveP)
-    fs.delete(oldP, true)
-    ()
-  }
-
-  /** Restore `live` from its `.old` twin if a crash landed between
-    * [[swapIn]]'s two renames. Runs before every live read of a
-    * swapped part; a healthy index makes this one existence probe.
-    */
-  private def recoverSwap(spark: SparkSession, indexPath: String,
-                          live: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val liveP = new org.apache.hadoop.fs.Path(s"$indexPath/$live")
-    val oldP = new org.apache.hadoop.fs.Path(s"$indexPath/$live.old")
-    if (!fs.exists(liveP) && fs.exists(oldP)) fs.rename(oldP, liveP)
-    ()
-  }
-
-  def appendIvfIndex(spark: SparkSession, indexPath: String, batch: DataFrame,
-                     rebuildAtDrift: Double = 0.2): IvfAppendReport = {
-    val b = batch.select(col("vec_id"), col("label"), col("v"))
-      .withColumn("norm", graft.functions.Vectors.normHof("v"))
-    val StatsRefresh(merged, newCents, drift, newCells) =
-      refreshStats(spark, indexPath, b)
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (drift > rebuildAtDrift) {
-      // re-quantize from scratch: stage the union (lists are being
-      // overwritten, so the read must not be lazy over them)
-      val existing = spark.read.parquet(s"$indexPath/lists")
-        .withColumn("label", col("label").cast(b.schema("label").dataType))
-        .select("vec_id", "label", "v", "norm")
-      existing.unionByName(b).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$indexPath/union_stage")
-      buildIvfIndexFrom(spark.read.parquet(s"$indexPath/union_stage"), indexPath)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexPath/union_stage"), true)
-      IvfAppendReport(drift, rebuilt = true, newCells)
-    } else {
-      // stage the refreshed stats/centroids (they READ the live
-      // copies), append the batch lists, then swap
-      merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$indexPath/stats_stage")
-      newCents.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$indexPath/centroids_stage")
-      b.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("label").parquet(s"$indexPath/lists")
-      swapIn(spark, indexPath, "stats_stage", "stats")
-      swapIn(spark, indexPath, "centroids_stage", "centroids")
-      IvfAppendReport(drift, rebuilt = false, newCells)
-    }
   }
 
   /** Probe a stored IVF index built by [[buildIvfIndex]]. Nothing is
@@ -265,7 +117,6 @@ object Similarity {
     * data — IndexSpec pins the round-trip).
     */
   def knnIvfPersisted(spark: SparkSession, dir: String, indexPath: String): DataFrame = {
-    recoverSwap(spark, indexPath, "centroids")
     val cents = spark.read.parquet(s"$indexPath/centroids")
     val lists = spark.read.parquet(s"$indexPath/lists")
       // partition-column inference may narrow the label type; restore
@@ -1165,23 +1016,13 @@ object Similarity {
     * serving layout on disk. Build cost is paid once; a probe reads
     * the 2 small tables plus nprobe partitions of 16-byte code rows.
     */
-  def buildIvfPqIndex(spark: SparkSession, dir: String, indexPath: String): Unit =
-    buildIvfPqIndexFrom(vecsWithNorm(spark, dir), indexPath)
-
-  /** [[buildIvfPqIndex]] from an arbitrary (vec_id, label, v, norm)
-    * relation, with the codebook optionally REUSED instead of
-    * retrained — the append path's fixed-codebook encode and the
-    * drift-triggered retrain are both this function. Coarse-cell
-    * sufficient statistics land beside the index like
-    * [[buildIvfIndexFrom]]'s, powering the same drift gate.
-    */
-  def buildIvfPqIndexFrom(e: DataFrame, indexPath: String,
-                          reuseCodebook: Option[DataFrame] = None): Unit = {
+  def buildIvfPqIndex(spark: SparkSession, dir: String, indexPath: String): Unit = {
+    val e = vecsWithNorm(spark, dir)
     ivfCentroids(e).write
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$indexPath/centroids")
     val subs = subsOf(e)
-    val cb = reuseCodebook.getOrElse(codebookFrom(subs))
+    val cb = codebookFrom(subs)
     cb.write
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$indexPath/codebook")
@@ -1189,56 +1030,6 @@ object Similarity {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("label")
       .parquet(s"$indexPath/codes")
-    ivfStats(e).write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$indexPath/stats")
-  }
-
-  /** APPEND-batch maintenance for the persisted IVF+PQ index: batch
-    * vectors are ENCODED WITH THE STORED CODEBOOK (append never
-    * silently retrains — quantization error against a stale codebook
-    * is exactly what the drift gate watches) and their 16-byte codes
-    * append to the coarse-cell layout; coarse centroids refresh from
-    * merged sufficient statistics as in [[appendIvfIndex]]. When the
-    * worst-cell centroid drift exceeds `rebuildAtDrift`, the codebook
-    * itself is stale — and since PQ codes are LOSSY, the raw corpus
-    * cannot be recovered from the index: the caller must supply
-    * `corpusForRebuild` (corpus ∪ batch as (vec_id, label, v, norm))
-    * for the retrain, else the append fails loudly rather than
-    * degrade recall silently.
-    */
-  def appendIvfPqIndex(spark: SparkSession, indexPath: String, batch: DataFrame,
-                       rebuildAtDrift: Double = 0.2,
-                       corpusForRebuild: Option[DataFrame] = None): IvfAppendReport = {
-    val b = batch.select(col("vec_id"), col("label"), col("v"))
-      .withColumn("norm", graft.functions.Vectors.normHof("v"))
-    val StatsRefresh(merged, newCents, drift, newCells) =
-      refreshStats(spark, indexPath, b)
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (drift > rebuildAtDrift) {
-      val corpus = corpusForRebuild.getOrElse(throw new IllegalStateException(
-        s"centroid drift $drift exceeds $rebuildAtDrift: PQ codes are lossy, " +
-          "supply corpusForRebuild to retrain the codebook"))
-      corpus.select("vec_id", "label", "v", "norm").write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$indexPath/union_stage")
-      buildIvfPqIndexFrom(spark.read.parquet(s"$indexPath/union_stage"), indexPath)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexPath/union_stage"), true)
-      IvfAppendReport(drift, rebuilt = true, newCells)
-    } else {
-      val cb = spark.read.parquet(s"$indexPath/codebook")
-      merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$indexPath/stats_stage")
-      newCents.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$indexPath/centroids_stage")
-      pqAssign(subsOf(b), cb).join(b.select("vec_id", "label"), "vec_id")
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("label").parquet(s"$indexPath/codes")
-      swapIn(spark, indexPath, "stats_stage", "stats")
-      swapIn(spark, indexPath, "centroids_stage", "centroids")
-      IvfAppendReport(drift, rebuilt = false, newCells)
-    }
   }
 
   /** Probe a stored IVF+PQ index: centroids, codebook, and codes all
@@ -1250,7 +1041,6 @@ object Similarity {
     */
   def knnIvfPqPersisted(spark: SparkSession, dir: String,
                         indexPath: String): DataFrame = {
-    recoverSwap(spark, indexPath, "centroids")
     val cents = spark.read.parquet(s"$indexPath/centroids")
     val codes = spark.read.parquet(s"$indexPath/codes")
       .withColumn("label", col("label").cast(cents.schema("label").dataType))

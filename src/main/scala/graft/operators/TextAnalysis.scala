@@ -22,10 +22,6 @@ object TextAnalysis {
     "fr" -> "filter", "fr" -> "stream",
     "zh" -> "hash", "zh" -> "sort")
 
-  /** SQL VALUES clause mirroring [[markers]] for the oracle. */
-  def markersValues: String =
-    markers.map { case (l, t) => s"('$l','$t')" }.mkString(", ")
-
   private def toks = split(col("text"), "\\s+")
 
   /** Marker-scoring language ID: count marker hits per candidate

@@ -95,57 +95,6 @@ object Extraction {
   def extractXmlEntities(spark: SparkSession, dir: String): DataFrame =
     parseXmlEntities(Tables.customer(spark, dir).select(synthXml.as("xml")))
 
-  /** File-in ingestion, SPLITTABLE: records are delimited on the
-    * closing tag via the text source's `lineSep`, so ONE multi-GB
-    * dump file fans out across `spark.sql.files.maxPartitionBytes`
-    * splits (the reader stitches records spanning a split boundary) —
-    * the distributed answer to the reference streaming a single huge
-    * ABR dump through iterparse (extract_abr_xml.py:120-160) instead
-    * of DOM-loading it. A wholetext read would make one file = one
-    * task = one String: parallel across files, serial (and OOM-bound)
-    * within one. Each emitted row is one `<tag …>…</tag>` record with
-    * any inter-record bytes stripped; the columnar parser downstream
-    * is unchanged. Caveat (shared with any delimiter-framed reader):
-    * the closing tag must not occur inside CDATA/payload text.
-    *
-    * `</tag>` is an exact delimiter (closing tags carry no
-    * attributes), but the OPEN tag is matched as `<tag` followed by
-    * whitespace or `>` — a bare contains/locate(`<tag`) would accept,
-    * and mis-position the strip on, sibling tags sharing the prefix
-    * (`<ABRN>`). The tag is regex-QUOTED into that pattern, so a
-    * recordTag carrying regex metacharacters frames literally instead
-    * of mis-matching or throwing.
-    *
-    * Truncation guard: a file cut mid-record leaves a final segment
-    * with no closing delimiter. A properly-framed segment ends where
-    * `</tag>` began — in record schemas like the ABR's that is an
-    * inner element's closing tag (`</Name>`) or a self-close (`/>`) —
-    * so a tail NOT ending in one is a cut record and is DROPPED
-    * rather than sealed with a synthetic close into a malformed row.
-    * Two residual edges are inherent to delimiter framing and are
-    * accepted explicitly: (a) a dump truncated EXACTLY at an inner
-    * closing-tag boundary is indistinguishable from a complete record
-    * and is sealed — its missing fields surface as nulls in
-    * [[parseXmlEntities]]'s fallback extraction and land in the
-    * clean_abr_rejects quarantine, which is the schema-aware
-    * validation layer; (b) a record whose LAST child is bare
-    * character data (`...text</tag>` with no inner close — not a
-    * shape the ABR dump produces) is dropped as if cut.
-    */
-  def readXmlFiles(spark: SparkSession, path: String,
-                   recordTag: String = "ABR"): DataFrame = {
-    val open = lit(s"<${java.util.regex.Pattern.quote(recordTag)}[\\s>]")
-    val pos = regexp_instr(col("value"), open)
-    spark.read.option("lineSep", s"</$recordTag>").text(path)
-      .filter(regexp_instr(col("value"), open) > 0)
-      .select(col("value").substr(pos, length(col("value"))).as("body"))
-      .filter(rtrim(col("body")).rlike("(</[^<>]+>|/>)$"))
-      .select(concat(col("body"), lit(s"</$recordTag>")).as("xml"))
-  }
-
-  def extractXmlFromFiles(spark: SparkSession, path: String): DataFrame =
-    parseXmlEntities(readXmlFiles(spark, path))
-
   /** Deterministic CC-style HTML per part; thirds of the corpus carry
     * the name in og:site_name, JSON-LD, or only <title>.
     */
@@ -195,25 +144,6 @@ object Extraction {
 
   def extractWarcRecords(spark: SparkSession, dir: String): DataFrame =
     parseWarcRecords(Tables.supplier(spark, dir).select(synthWarc.as("rec")))
-
-  /** File-in ingestion for WARC, SPLITTABLE: records are framed on
-    * the `WARC/1.0` version line via `lineSep`, so one ~1 GB segment
-    * file spreads across many tasks instead of being one wholetext
-    * String per task (extract_common_crawl.py walks segments serially
-    * with warcio; this is the columnar, intra-file-parallel form).
-    * The stripped delimiter is re-attached so each row is a complete
-    * record for [[parseWarcRecords]]. Caveat: payloads containing a
-    * literal `WARC/1.0\n` line would split early — real WARC uses
-    * Content-Length framing; this reader targets the uncompressed
-    * concatenated-record shape the reference synthesizes.
-    */
-  def readWarcFiles(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("lineSep", "WARC/1.0\n").text(path)
-      .filter(length(trim(col("value"))) > 0)
-      .select(concat(lit("WARC/1.0\n"), col("value")).as("rec"))
-
-  def extractWarcFromFiles(spark: SparkSession, path: String): DataFrame =
-    parseWarcRecords(readWarcFiles(spark, path))
 
   /** og:site_name → JSON-LD Organization name → title fallback chain
     * (extract_common_crawl.py extract_company_info steps 1-3), with

@@ -33,24 +33,15 @@ class GovernanceSpec extends SparkSpec {
     out.unpersist()
   }
 
-  test("config-driven expectations: rules parse from a config table and count violations exactly") {
-    import spark.implicits._
+  test("config-driven expectations: rules count violations exactly") {
     import operators.Governance
-    // declarative config, the dbt schema.yml shape
-    val config = Seq(
-      ("t", "id", "not_null", null.asInstanceOf[String]),
-      ("t", "id", "unique", ""),
-      ("t", "status", "accepted_values", "A, B"),
-      ("t", "score", "range", "0, 1"),
-      ("t", "code", "regex", "^[a-z]+$"))
-      .toDF("table_name", "column_name", "test", "params")
-    val rules = Governance.parseRules(config)
-    assert(rules == Seq(
+    // declarative rules, the dbt schema.yml shape
+    val rules = Seq(
       Governance.Expectation("t", "id", "not_null"),
       Governance.Expectation("t", "id", "unique"),
       Governance.Expectation("t", "status", "accepted_values", Seq("A", "B")),
       Governance.Expectation("t", "score", "range", Seq("0", "1")),
-      Governance.Expectation("t", "code", "regex", Seq("^[a-z]+$"))))
+      Governance.Expectation("t", "code", "regex", Seq("^[a-z]+$")))
     // planted violations: 1 null id, 1 dup id, 1 bad status,
     // 1 out-of-range score, 2 bad codes; the all-null last row must
     // only violate not_null (the dbt convention)

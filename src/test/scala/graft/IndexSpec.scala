@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.functions._
 
 /** Lifecycle pins for the persisted ANN index: build once, write,
   * probe the stored copy — the probe must match the in-memory result
@@ -34,51 +33,6 @@ class IndexSpec extends SparkSpec {
       s"expected dynamic partition pruning on the lists scan:\n${p.take(3000)}")
   }
 
-  test("dedup index: a new batch probed against the stored corpus matches a monolithic run") {
-    val idx = Files.createTempDirectory("graft-dedup-idx").toString
-    operators.Dedup.buildDedupIndex(spark, sf, idx)
-    // "new" batch: a slice of the corpus re-labeled with fresh ids —
-    // guaranteed near-dups (jaccard 1.0 with their originals) plus
-    // whatever real near-dups exist
-    val batch = Tables.documents(spark, sf)
-      .filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    val got = operators.Dedup.dedupAgainstIndex(spark, idx, batch)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // every batch doc is a verbatim copy of its source → its (batch,
-    // original) self-pair must be reported at jaccard 1.0 (docs with
-    // < 3 tokens have no shingles and are out of scope by design)
-    val expectedSelf = operators.Dedup
-      .shinglesOf(Tables.documents(spark, sf).filter(col("doc_id") % 7 === 0))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val selfPairs = got.filter { case (i, j, _) => i == j + 1000000L }
-    assert(selfPairs.map(_._2) == expectedSelf,
-      s"each copied doc must match its original: ${expectedSelf.size} expected, ${selfPairs.size} got")
-    assert(selfPairs.forall(_._3 == 1.0))
-    // and the full result equals a monolithic union-run restricted to
-    // batch-vs-corpus crossings: same bands, same verify
-    val union = Tables.documents(spark, sf).select("doc_id", "text")
-      .unionByName(batch)
-    val sh = operators.Dedup.shinglesOf(union)
-    val bands = operators.Dedup.bandsOf(sh)
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_val") === col("b.band_val") &&
-        col("a.doc_id") >= 1000000L && col("b.doc_id") < 1000000L)
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j")).distinct()
-    val sa = sh.select(col("doc_id").as("i"), col("s").as("si"))
-    val sb = sh.select(col("doc_id").as("j"), col("s").as("sj"))
-    val want = cand.join(sa, "i").join(sb, "j")
-      .withColumn("inter", size(array_intersect(col("si"), col("sj"))).cast("double"))
-      .withColumn("jaccard", round(
-        col("inter") / (size(col("si")) + size(col("sj")) - col("inter")), 6))
-      .filter(col("jaccard") >= 0.8)
-      .select("i", "j", "jaccard")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(got == want,
-      s"diff=${(got diff want).take(3)} / ${(want diff got).take(3)}")
-  }
-
   test("IVF+PQ index round-trip: stored probe equals the in-memory composition") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
     operators.Similarity.buildIvfPqIndex(spark, sf, dir)
@@ -98,121 +52,6 @@ class IndexSpec extends SparkSpec {
     val out2 = operators.Similarity.knnIvfIndexed(spark, sf).collect().toSeq
     val mem = operators.Similarity.knnIvf(spark, sf).collect().toSeq
     assert(out1 == mem && out2 == mem)
-  }
-
-  private def vecs = Tables.embeddings(spark, sf).select(col("vec_id"),
-      col("label"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-    .withColumn("norm", functions.Vectors.normHof("v"))
-
-  test("IVF append: probe after an in-place append equals a rebuild from scratch") {
-    val idx = Files.createTempDirectory("graft-ivf-app").toString
-    val a = vecs.filter(col("vec_id") < 400)
-    val b = vecs.filter(col("vec_id") >= 400)
-    operators.Similarity.buildIvfIndexFrom(a, idx)
-    // these synthetic embeddings have noise-dominated cell means, so
-    // even an honest batch moves centroid DIRECTION noticeably — pass
-    // an explicit gate, as a deployment tuned to its data would
-    val report = operators.Similarity.appendIvfIndex(spark, idx, b,
-      rebuildAtDrift = 0.5)
-    assert(!report.rebuilt,
-      s"same-distribution batch must append in place (drift=${report.drift})")
-    assert(report.drift >= 0.0 && report.drift < 0.5)
-    val appended = operators.Similarity.knnIvfPersisted(spark, sf, idx).collect().toSeq
-    // union == the full corpus, so the appended index must answer
-    // exactly like a from-scratch build (and the in-memory knnIvf)
-    val rebuilt = Files.createTempDirectory("graft-ivf-reb").toString
-    operators.Similarity.buildIvfIndexFrom(vecs, rebuilt)
-    assert(appended == operators.Similarity.knnIvfPersisted(spark, sf, rebuilt)
-      .collect().toSeq, "append-maintained probe must equal rebuild-from-scratch")
-    assert(appended == operators.Similarity.knnIvf(spark, sf).collect().toSeq)
-    // refreshed stats carry the union counts exactly
-    val n = spark.read.parquet(s"$idx/stats")
-      .agg(sum("n")).head().getLong(0)
-    assert(n == vecs.count())
-  }
-
-  test("IVF append: excessive centroid drift triggers the re-quantize path") {
-    val idx = Files.createTempDirectory("graft-ivf-drift").toString
-    val a = vecs.filter(col("vec_id") < 400)
-    operators.Similarity.buildIvfIndexFrom(a, idx)
-    // adversarial batch: many strongly-negated vectors per cell flip
-    // the refreshed centroids — the index no longer represents the data
-    val hostile = vecs.filter(col("vec_id") >= 400)
-      .withColumn("v", expr("transform(v, x -> -10.0 * x)"))
-      .select(col("vec_id") + 100000L as "vec_id", col("label"), col("v"))
-    val report = operators.Similarity.appendIvfIndex(spark, idx, hostile)
-    assert(report.rebuilt, s"drift ${report.drift} must exceed the 0.2 gate")
-    assert(report.drift > 0.2)
-    // the rebuilt index holds the union and still probes cleanly
-    val n = spark.read.parquet(s"$idx/stats").agg(sum("n")).head().getLong(0)
-    assert(n == a.count() + hostile.count())
-    assert(operators.Similarity.knnIvfPersisted(spark, sf, idx).count() == 5)
-  }
-
-  test("IVF+PQ append: fixed-codebook encode equals a union build with that codebook") {
-    val idx = Files.createTempDirectory("graft-ivfpq-app").toString
-    val a = vecs.filter(col("vec_id") < 400)
-    val b = vecs.filter(col("vec_id") >= 400)
-    operators.Similarity.buildIvfPqIndexFrom(a, idx)
-    val report = operators.Similarity.appendIvfPqIndex(spark, idx, b,
-      rebuildAtDrift = 0.5)
-    assert(!report.rebuilt && report.drift < 0.5)
-    val appended = operators.Similarity.knnIvfPqPersisted(spark, sf, idx)
-      .collect().toSeq
-    // reference: encode the UNION with the SAME stored codebook — the
-    // contract of a fixed-codebook append (a retrain is exactly what
-    // the drift gate exists to decide)
-    val ref = Files.createTempDirectory("graft-ivfpq-ref").toString
-    operators.Similarity.buildIvfPqIndexFrom(vecs, ref,
-      reuseCodebook = Some(spark.read.parquet(s"$idx/codebook")))
-    assert(appended == operators.Similarity.knnIvfPqPersisted(spark, sf, ref)
-      .collect().toSeq)
-  }
-
-  test("IVF+PQ append: drift without a corpus fails loudly; with one, retrains") {
-    val idx = Files.createTempDirectory("graft-ivfpq-drift").toString
-    val a = vecs.filter(col("vec_id") < 400)
-    operators.Similarity.buildIvfPqIndexFrom(a, idx)
-    val hostile = vecs.filter(col("vec_id") >= 400)
-      .withColumn("v", expr("transform(v, x -> -10.0 * x)"))
-      .select(col("vec_id") + 100000L as "vec_id", col("label"), col("v"))
-    // PQ codes are lossy: a silent rebuild is impossible
-    intercept[IllegalStateException] {
-      operators.Similarity.appendIvfPqIndex(spark, idx, hostile)
-    }
-    val union = a.unionByName(hostile.withColumn("norm",
-      functions.Vectors.normHof("v")))
-    val report = operators.Similarity.appendIvfPqIndex(spark, idx, hostile,
-      corpusForRebuild = Some(union))
-    assert(report.rebuilt && report.drift > 0.2)
-    assert(operators.Similarity.knnIvfPqPersisted(spark, sf, idx).count() == 5)
-  }
-
-  test("swap crash recovery: probes and appends restore a part from its .old twin") {
-    val idx = Files.createTempDirectory("graft-ivf-crash").toString
-    operators.Similarity.buildIvfIndexFrom(vecs, idx)
-    val expected = operators.Similarity.knnIvfPersisted(spark, sf, idx)
-      .collect().toSeq
-    // simulate a crash between swapIn's two renames: the live copy is
-    // gone, the .old twin holds the pre-swap table — the next probe
-    // must self-restore instead of failing hard
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def crash(part: String): Unit = {
-      assert(fs.rename(new org.apache.hadoop.fs.Path(s"$idx/$part"),
-        new org.apache.hadoop.fs.Path(s"$idx/$part.old")))
-      ()
-    }
-    crash("centroids")
-    assert(operators.Similarity.knnIvfPersisted(spark, sf, idx)
-      .collect().toSeq == expected)
-    // the append path (refreshStats reads stats AND centroids) recovers too
-    crash("stats"); crash("centroids")
-    val report = operators.Similarity.appendIvfIndex(spark, idx,
-      vecs.filter(col("vec_id") >= 99000), rebuildAtDrift = 1.0)
-    assert(!report.rebuilt)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$idx/stats")) &&
-      fs.exists(new org.apache.hadoop.fs.Path(s"$idx/centroids")))
   }
 
   test("ensureIndex self-heals an incomplete target and sweeps orphan stages") {

@@ -22,8 +22,8 @@ class OperatorsSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every query has an oracle or is documented no-oracle") {
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- SparkEntry.noOracle
+  test("every registered query has an oracle") {
+    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(missing.isEmpty, s"queries without oracle: $missing")
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle without query: $orphans")

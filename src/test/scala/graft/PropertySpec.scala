@@ -49,28 +49,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  // reference Morton interleave (bit loop — independent of the
-  // mask-cascade formulation under test)
-  private def refMorton(x: Int, y: Int): Long =
-    (0 until 16).foldLeft(0L) { (acc, i) =>
-      acc | ((x.toLong >> i & 1L) << (2 * i)) | ((y.toLong >> i & 1L) << (2 * i + 1))
-    }
-
-  test("ZOrder: equals the reference interleave and preserves dominance order") {
-    import spark.implicits._
-    val coord = Gen.choose(0, 65535)
-    val pts = sample(Gen.zip(coord, coord), 300, 7L)
-    val out = pts.toDF("x", "y")
-      .withColumn("z", graft.functions.ZOrder.zvalue(col("x"), col("y")))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-    out.foreach { case (x, y, z) =>
-      assert(z == refMorton(x, y), s"($x,$y): $z != ${refMorton(x, y)}")
-    }
-    // dominance: componentwise <= implies morton <=
-    for (Seq((x1, y1, z1), (x2, y2, z2)) <- out.toSeq.combinations(2).take(5000))
-      if (x1 <= x2 && y1 <= y2) assert(z1 <= z2, s"($x1,$y1) vs ($x2,$y2)")
-  }
-
   test("graft_hex_long: agrees with BigInt parsing on md5 prefixes") {
     import spark.implicits._
     val strs = sample(Gen.alphaNumStr.map(_.take(30)), 200, 11L)
@@ -398,14 +376,14 @@ class PropertySpec extends SparkSpec {
     val df = docs.zipWithIndex
       .map { case (ts, i) => (i.toLong, ts, rng.shuffle(ts)) }
       .toDF("id", "t1", "t2")
-      .withColumn("h1", graft.functions.SimHash64.simhash64(col("t1")))
-      .withColumn("h2", graft.functions.SimHash64.simhash64(col("t2")))
+      .withColumn("h1", call_function("graft_simhash64", col("t1")))
+      .withColumn("h2", call_function("graft_simhash64", col("t2")))
     assert(df.filter(col("h1") =!= col("h2")).count() == 0,
       "simhash must not depend on token order")
     // deterministic across evaluations
     val again = docs.zipWithIndex.map { case (ts, i) => (i.toLong, ts) }
       .toDF("id", "t1")
-      .withColumn("h", graft.functions.SimHash64.simhash64(col("t1")))
+      .withColumn("h", call_function("graft_simhash64", col("t1")))
       .select("id", "h")
     val first = df.select(col("id"), col("h1").as("h"))
     assert(first.except(again).count() == 0 && again.except(first).count() == 0)

@@ -102,8 +102,7 @@ class R9Batch1Spec extends SparkSpec {
 }
 
 class R9AHashSpec extends SparkSpec {
-  import multimodal.BinaryColumns
-  import multimodal.BinaryColumns.{FakeDecoder, MediaRow}
+  import multimodal.BinaryColumns.FakeDecoder
 
   // deterministic textured test image: per-pixel function of (x, y,
   // seed) so near-dups (same seed, few pixels perturbed) and
@@ -167,17 +166,5 @@ class R9AHashSpec extends SparkSpec {
       s"unrelated pairs sit below the expected noise floor: $unrelatedD")
     assert(worstNear < medUnrel,
       s"near-dups ($nearD) must rank above the noise floor ($medUnrel)")
-  }
-
-  test("imageAverageHashes: partition-parallel hashing equals local kernel") {
-    import spark.implicits._
-    val rows = (0 until 6).map { s =>
-      MediaRow(s.toLong, pngBytes(img(24, 24, s)), "image/png", 0L, "")
-    }
-    val got = BinaryColumns.imageAverageHashes(spark.createDataset(rows))
-      .collect().map(r => r.media_id -> r.ahash64).toMap
-    val want = rows.map(r =>
-      r.media_id -> FakeDecoder.averageHash64(r.payload)).toMap
-    assert(got == want)
   }
 }

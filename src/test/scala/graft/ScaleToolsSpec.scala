@@ -74,56 +74,6 @@ class ScaleToolsSpec extends SparkSpec {
     }
   }
 
-  test("saltedCountDistinct is exact (equals plain countDistinct)") {
-    val e = Tables.events(spark, sf)
-    val plain = e.groupBy("event_type")
-      .agg(countDistinct("user_id").as("n_distinct"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val salted = Skew.saltedCountDistinct(e, Seq("event_type"), col("user_id"), 16)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(salted == plain)
-  }
-
-  test("zvalue interleaves bits; z-write lays out disjoint z-ranges") {
-    import spark.implicits._
-    // spread(3)=0b0101, spread(5)<<1=0b100010 → 0b100111 = 39
-    val z = Seq((3L, 5L)).toDF("x", "y")
-      .select(graft.functions.ZOrder.zvalue(col("x"), col("y"))).head.getLong(0)
-    assert(z == 39L, s"zvalue(3,5) = $z")
-    // 64x64 grid, 4 z-range files: files must cover DISJOINT z-ranges
-    // (that is the clustering property row-group pruning relies on;
-    // the rectangle shape follows from Morton math)
-    val dir = java.nio.file.Files.createTempDirectory("graft-z").toString
-    val grid = spark.range(64 * 64)
-      .select((col("id") % 64).as("x"), expr("id div 64").as("y"))
-    graft.sources.Sinks.writeZOrdered(grid, dir, "x", "y", 4)
-    assert(spark.read.parquet(dir).count() == 64 * 64)
-    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(files.length == 4)
-    val ranges = files.map { f =>
-      val r = spark.read.parquet(f.getPath)
-        .select(graft.functions.ZOrder.zvalue(col("x"), col("y")).as("z"))
-        .agg(min("z"), max("z")).head
-      (r.getLong(0), r.getLong(1))
-    }.sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi), (lo, _)) => assert(hi < lo, s"z-ranges overlap: $hi >= $lo")
-      case _ =>
-    }
-  }
-
-  test("compact rewrites many small files into few, preserving rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
-    val df = Tables.nation(spark, sf)
-    df.repartition(12).write.mode("overwrite").parquet(dir)
-    def parquetFiles = new java.io.File(dir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles >= 10)
-    graft.sources.Sinks.compact(spark, dir, rowsPerFile = 1000)
-    assert(parquetFiles == 1, s"$parquetFiles files after compaction")
-    assert(spark.read.parquet(dir).count() == df.count())
-  }
-
   test("PlanCache.invalidate drops entries for the named dir only") {
     val dirA = java.nio.file.Files.createTempDirectory("graft-pc-a").toString
     val dirB = java.nio.file.Files.createTempDirectory("graft-pc-b").toString
@@ -146,44 +96,5 @@ class ScaleToolsSpec extends SparkSpec {
     assert(builds == 3)
     assert(cachedCount(dirB) == 5 && builds == 3, "other dirs keep their entries")
     PlanCache.invalidate(dirA); PlanCache.invalidate(dirB)
-  }
-
-  test("upsertJdbc rejects unsafe table identifiers") {
-    import org.apache.spark.sql.functions.lit
-    val df = Tables.nation(spark, sf).limit(1).withColumn("v", lit(1L))
-    val props = new java.util.Properties()
-    intercept[IllegalArgumentException] {
-      graft.sources.Sinks.upsertJdbc(df, "jdbc:derby:memory:unused",
-        "t; DROP TABLE x", Seq("n_nationkey"), "v", props)
-    }
-  }
-
-  test("bucketed tables join without a shuffle exchange") {
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    // a killed prior run can leave the managed location behind with
-    // no catalog entry; saveAsTable then refuses the path
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    Seq("b_orders", "b_lineitem").foreach { t =>
-      val d = new java.io.File(wh, t)
-      if (d.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(d)
-      }
-    }
-    Tables.orders(spark, sf).write.bucketBy(8, "o_orderkey")
-      .sortBy("o_orderkey").mode("overwrite").saveAsTable("b_orders")
-    Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
-      .write.bucketBy(8, "l_orderkey")
-      .sortBy("l_orderkey").mode("overwrite").saveAsTable("b_lineitem")
-    val joined = spark.table("b_orders")
-      .join(spark.table("b_lineitem"), col("o_orderkey") === col("l_orderkey"))
-    val plan = joined.queryExecution.executedPlan.toString
-    // co-located buckets: the join must not re-shuffle either side
-    assert(!plan.contains("Exchange hashpartitioning"), plan.linesIterator.take(12).mkString("\n"))
-    assert(joined.count() == Tables.lineitem(spark, sf).count())
   }
 }

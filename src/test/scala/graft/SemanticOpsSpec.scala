@@ -106,17 +106,6 @@ class SemanticOpsSpec extends SparkSpec {
     out.unpersist()
   }
 
-  test("observedClean: metrics ride the action, no second input scan") {
-    val (cleaned, obs) = operators.Quality.observedClean(spark, sf)
-    val kept = cleaned.count() // the ONE action; metrics are its side effect
-    val m = obs.get
-    val total = Tables.customer(spark, sf).count()
-    assert(m("rows_seen") == total)
-    assert(m("null_keys") == 0L)
-    // kept + filtered-out = observed total (metrics see PRE-filter rows)
-    assert(kept + m("negative_balances").asInstanceOf[Long] == total)
-  }
-
   test("events_user_profile: type counts partition the event count") {
     val out = operators.Events.eventsUserProfile(spark, sf).cache()
     assert(out.count() == Tables.events(spark, sf)

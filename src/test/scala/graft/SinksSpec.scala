@@ -9,46 +9,6 @@ class SinksSpec extends SparkSpec {
   private def tmp(): String =
     Files.createTempDirectory("graft-sink").toString
 
-  test("writeShards: per-shard files reproduce the query's order with no global sort") {
-    import org.apache.spark.sql.catalyst.plans.logical.Sort
-    val dir = tmp()
-    val docs = Tables.documents(spark, sf).select("doc_id", "text")
-    val shards = 4
-    Sinks.writeShards(docs, dir, shards)
-    // one file per shard (the hash exchange lands each shard whole in
-    // one task), named shard=K by the partitioned write
-    val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.toSeq == (0 until shards).map(i => s"shard=$i"))
-    dirs.foreach { d =>
-      assert(new java.io.File(s"$dir/$d").listFiles()
-        .count(_.getName.endsWith(".parquet")) == 1, s"$d must hold ONE file")
-    }
-    // row order INSIDE each shard file == the registered query's
-    // within-shard (u, doc_id) order — the byte-identical handoff
-    val expect = operators.Sampling.sampleShardShuffle(spark, sf, shards)
-      .collect()
-      .groupBy(_.getAs[Int]("shard"))
-      .map { case (s, rows) =>
-        s -> rows.sortBy(_.getAs[Int]("pos")).map(_.getAs[Long]("doc_id")).toSeq
-      }
-    (0 until shards).foreach { s =>
-      val got = spark.read.parquet(s"$dir/shard=$s")
-        .collect().map(_.getAs[Long]("doc_id")).toSeq
-      assert(got == expect(s), s"shard $s row order must match the query")
-    }
-    // plan pin: the writer's layout has NO global sort and NO range
-    // exchange — its only exchange is the shard-id hash
-    val layout = Sinks.shardLayout(docs, shards)
-    assert(layout.queryExecution.optimizedPlan.collect {
-      case so: Sort if so.global => so }.isEmpty,
-      "the shard writer must never pay a global sort")
-    val plan = layout.queryExecution.executedPlan.toString
-    assert(!plan.contains("rangepartitioning"),
-      s"no range exchange in the shard layout:\n${plan.take(1500)}")
-    assert(plan.contains("hashpartitioning(shard"),
-      s"the one exchange is the shard-id hash:\n${plan.take(1500)}")
-  }
-
   test("writePartitioned lays out one directory per key value") {
     val dir = tmp()
     val df = Tables.orders(spark, sf).limit(500)
@@ -57,22 +17,6 @@ class SinksSpec extends SparkSpec {
     assert(parts.forall(_.startsWith("o_orderstatus=")))
     val back = spark.read.parquet(dir)
     assert(back.count() == df.count())
-  }
-
-  test("upsertLatestWins keeps highest version, updates beat base on ties") {
-    import spark.implicits._
-    val base = Seq((1L, "old", 1L), (2L, "keep", 5L)).toDF("k", "v", "ver")
-    val updates = Seq((1L, "new", 2L), (2L, "lose", 4L), (3L, "ins", 1L))
-      .toDF("k", "v", "ver")
-    val merged = Sinks.upsertLatestWins(base, updates, Seq("k"), "ver")
-      .orderBy("k").as[(Long, String, Long)].collect()
-    assert(merged.toSeq == Seq((1L, "new", 2L), (2L, "keep", 5L), (3L, "ins", 1L)))
-    // tie on version: update wins
-    val tie = Sinks.upsertLatestWins(
-      Seq((9L, "base", 3L)).toDF("k", "v", "ver"),
-      Seq((9L, "upd", 3L)).toDF("k", "v", "ver"), Seq("k"), "ver")
-      .as[(Long, String, Long)].collect()
-    assert(tie.head._2 == "upd")
   }
 
   test("sorted write clusters values so selective scans prune row groups") {
@@ -95,337 +39,6 @@ class SinksSpec extends SparkSpec {
     }
   }
 
-  test("csv round-trip preserves values under explicit schema") {
-    val dir = tmp()
-    val df = Tables.nation(spark, sf)
-    Sinks.writeCsv(df, dir)
-    val back = Sinks.readCsv(spark, dir, df.schema)
-    assert(back.orderBy("n_nationkey").collect().toSeq ==
-      df.orderBy("n_nationkey").collect().toSeq)
-  }
-
-  test("orc round-trip preserves values, predicates reach the orc scan") {
-    val dir = tmp()
-    val df = Tables.nation(spark, sf)
-    Sinks.writeOrc(df, dir)
-    val back = Sinks.readOrc(spark, dir)
-    assert(back.orderBy("n_nationkey").collect().toSeq ==
-      df.orderBy("n_nationkey").collect().toSeq)
-    val p = back.filter(col("n_nationkey") > 10)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("PushedFilters: [IsNotNull(n_nationkey), GreaterThan(n_nationkey,10)]"), p)
-  }
-
-  test("csv quarantine: malformed rows are preserved, good rows parse clean") {
-    import org.apache.spark.sql.types._
-    val dir = tmp()
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("name", StringType),
-      StructField("score", DoubleType)))
-    val lines = Seq(
-      "id,name,score",
-      "1,alpha,0.5",
-      "2,beta,not_a_number", // type violation -> quarantine
-      "4,delta",             // too FEW fields -> quarantine (not nulls)
-      "5,eps,0.5,extra",     // too MANY fields -> quarantine (not silent drop)
-      "6,\"zeta,comma\",2.5", // quoted comma is ONE field -> good
-      "3,gamma,1.25")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "in.csv"),
-      String.join("\n", lines: _*).getBytes("UTF-8"))
-    val good = Sinks.csvGood(spark, dir, schema)
-    val bad = Sinks.csvQuarantine(spark, dir, schema)
-    assert(good.count() == 3)
-    assert(good.filter(col("id").isin(2, 4, 5)).count() == 0)
-    assert(good.filter(col("id") === 6).head.getString(1) == "zeta,comma")
-    val q = bad.collect().map(_.getString(0)).sorted
-    assert(q.length == 3, q.mkString("|"))
-    assert(q.exists(_.contains("not_a_number")) && q.exists(_.startsWith("4,"))
-      && q.exists(_.contains("extra")), q.mkString("|"))
-  }
-
-  test("jdbc sink: batch write + staged MERGE upsert match upsertLatestWins") {
-    import spark.implicits._
-    val url = "jdbc:derby:memory:graftjdbc;create=true"
-    val props = new java.util.Properties() // Derby autoloads via the JDBC service loader
-    val base = Seq((1L, "old", 1L), (2L, "keep", 5L)).toDF("k", "v", "ver")
-    val updates = Seq((1L, "new", 2L), (2L, "lose", 4L), (3L, "ins", 1L), (9L, "upd", 3L))
-      .toDF("k", "v", "ver")
-    Sinks.writeJdbc(base.unionByName(Seq((9L, "base", 3L)).toDF("k", "v", "ver")),
-      url, "matches", props, batchSize = 2)
-    Sinks.upsertJdbc(updates, url, "matches", Seq("k"), "ver", props, batchSize = 2)
-    val back = spark.read.jdbc(url, "matches", props)
-      .toDF("k", "v", "ver") // Derby uppercases unquoted identifiers
-      .orderBy("k").as[(Long, String, Long)].collect().toSeq
-    val expected = Sinks.upsertLatestWins(
-        base.unionByName(Seq((9L, "base", 3L)).toDF("k", "v", "ver")),
-        updates, Seq("k"), "ver")
-      .orderBy("k").as[(Long, String, Long)].collect().toSeq
-    assert(back == expected)
-    // staging table dropped after the merge
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val rs = conn.getMetaData.getTables(null, null, "MATCHES_STG", null)
-      assert(!rs.next(), "staging table should be dropped")
-    } finally conn.close()
-  }
-
-  test("upsertWhere: predicate gates updates, inserts always land (ON CONFLICT WHERE parity)") {
-    import spark.implicits._
-    val base = Seq((1L, "keepme", 0.9), (2L, "stale", 0.3), (3L, "only_base", 0.5))
-      .toDF("k", "name", "confidence")
-    val updates = Seq(
-      (1L, "worse", 0.4),   // lower confidence -> must NOT overwrite
-      (2L, "better", 0.8),  // higher confidence -> overwrites
-      (4L, "fresh", 0.1))   // new key -> always inserts, predicate irrelevant
-      .toDF("k", "name", "confidence")
-    val out = Sinks.upsertWhere(base, updates, Seq("k"),
-        col("t.confidence") < col("s.confidence"))
-      .orderBy("k").as[(Long, String, Double)].collect().toSeq
-    assert(out == Seq(
-      (1L, "keepme", 0.9), (2L, "better", 0.8),
-      (3L, "only_base", 0.5), (4L, "fresh", 0.1)))
-    // version-guard predicate reproduces upsertLatestWins on key-unique updates
-    val b2 = Seq((1L, "a", 1L), (2L, "b", 5L)).toDF("k", "v", "ver")
-    val u2 = Seq((1L, "a2", 2L), (2L, "b2", 4L), (3L, "c", 1L)).toDF("k", "v", "ver")
-    val viaWhere = Sinks.upsertWhere(b2, u2, Seq("k"),
-        col("s.ver") >= col("t.ver"))
-      .orderBy("k").as[(Long, String, Long)].collect().toSeq
-    val viaLatest = Sinks.upsertLatestWins(b2, u2, Seq("k"), "ver")
-      .orderBy("k").as[(Long, String, Long)].collect().toSeq
-    assert(viaWhere == viaLatest)
-  }
-
-  test("upsertJdbc with updateWhen: lower-confidence incoming row does not overwrite") {
-    import spark.implicits._
-    val url = "jdbc:derby:memory:graftjdbcguard;create=true"
-    val props = new java.util.Properties()
-    val base = Seq((1L, "keepme", 0.9), (2L, "stale", 0.3)).toDF("k", "name", "confidence")
-    val updates = Seq((1L, "worse", 0.4), (2L, "better", 0.8), (3L, "ins", 0.2))
-      .toDF("k", "name", "confidence")
-    Sinks.writeJdbc(base, url, "guarded", props, batchSize = 2)
-    Sinks.upsertJdbc(updates, url, "guarded", Seq("k"), "confidence", props,
-      batchSize = 2, updateWhen = Some("t.\"confidence\" < s.\"confidence\""))
-    val back = spark.read.jdbc(url, "guarded", props)
-      .toDF("k", "name", "confidence")
-      .orderBy("k").as[(Long, String, Double)].collect().toSeq
-    assert(back == Seq((1L, "keepme", 0.9), (2L, "better", 0.8), (3L, "ins", 0.2)))
-    // and the DataFrame twin agrees row-for-row
-    val twin = Sinks.upsertWhere(base, updates, Seq("k"),
-        col("t.confidence") < col("s.confidence"))
-      .orderBy("k").as[(Long, String, Double)].collect().toSeq
-    assert(back == twin)
-  }
-
-  test("incrementalAggregate: three batch folds equal one full recompute") {
-    val dir = tmp() + "/agg_table"
-    val o = Tables.orders(spark, sf)
-    val batches = Seq(
-      o.filter(col("o_orderkey") % 3 === 0),
-      o.filter(col("o_orderkey") % 3 === 1),
-      o.filter(col("o_orderkey") % 3 === 2))
-    var last: org.apache.spark.sql.DataFrame = null
-    batches.foreach { b =>
-      last = Sinks.incrementalAggregate(spark, dir, b,
-        Seq("o_orderstatus"), "o_totalprice")
-    }
-    val full = o.groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n_rows"), sum("o_totalprice").as("sum_val"))
-    val got = last.orderBy("o_orderstatus")
-      .collect().map(r => (r.getString(0), r.getLong(1),
-        math.round(r.getDouble(2) * 100)))
-    val want = full.orderBy("o_orderstatus")
-      .collect().map(r => (r.getString(0), r.getLong(1),
-        math.round(r.getDouble(2) * 100)))
-    assert(got.toSeq == want.toSeq)
-  }
-
-  test("incrementalAggregate: recovers live table after mid-swap crash") {
-    val dir = tmp() + "/agg_crash"
-    val o = Tables.orders(spark, sf)
-    val b1 = o.filter(col("o_orderkey") % 2 === 0)
-    val b2 = o.filter(col("o_orderkey") % 2 === 1)
-    Sinks.incrementalAggregate(spark, dir, b1, Seq("o_orderstatus"), "o_totalprice")
-    // simulate a crash between rename(live→trash) and rename(tmp→live):
-    // live is gone, tmp holds the (completed) merged table, trash the
-    // pre-merge history — exactly the window the recovery step covers
-    val hPath = new org.apache.hadoop.fs.Path(dir)
-    val hfs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    hfs.rename(hPath, new org.apache.hadoop.fs.Path(dir + ".tmp"))
-    graft.PlanCache.invalidate(dir)
-    // the next fold must promote tmp back to live, NOT treat b2 as
-    // the entire history (the pre-fix behavior lost every prior batch)
-    val last = Sinks.incrementalAggregate(spark, dir, b2,
-      Seq("o_orderstatus"), "o_totalprice")
-    val full = o.groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n_rows"), sum("o_totalprice").as("sum_val"))
-    val got = last.orderBy("o_orderstatus")
-      .collect().map(r => (r.getString(0), r.getLong(1),
-        math.round(r.getDouble(2) * 100)))
-    val want = full.orderBy("o_orderstatus")
-      .collect().map(r => (r.getString(0), r.getLong(1),
-        math.round(r.getDouble(2) * 100)))
-    assert(got.toSeq == want.toSeq,
-      "recovery must restore history before folding the new batch")
-    assert(!hfs.exists(new org.apache.hadoop.fs.Path(dir + ".tmp"))
-      && !hfs.exists(new org.apache.hadoop.fs.Path(dir + ".old")),
-      "staging dirs cleaned up after a healthy swap")
-  }
-
-  test("incrementalAggregate: a partial tmp write is never promoted; trash restores instead") {
-    val dir = tmp() + "/agg_partial"
-    val o = Tables.orders(spark, sf)
-    val b1 = o.filter(col("o_orderkey") % 2 === 0)
-    val b2 = o.filter(col("o_orderkey") % 2 === 1)
-    Sinks.incrementalAggregate(spark, dir, b1, Seq("o_orderstatus"), "o_totalprice")
-    // simulate a crash DURING the tmp write after live→trash: live
-    // gone, trash = history, tmp = garbage with NO _SUCCESS marker
-    val hPath = new org.apache.hadoop.fs.Path(dir)
-    val hfs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    hfs.rename(hPath, new org.apache.hadoop.fs.Path(dir + ".old"))
-    val junk = new org.apache.hadoop.fs.Path(dir + ".tmp/part-garbage")
-    val out = hfs.create(junk); out.write("not parquet".getBytes); out.close()
-    graft.PlanCache.invalidate(dir)
-    val last = Sinks.incrementalAggregate(spark, dir, b2,
-      Seq("o_orderstatus"), "o_totalprice")
-    val want = o.groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n_rows"), sum("o_totalprice").as("sum_val"))
-      .orderBy("o_orderstatus")
-      .collect().map(r => (r.getString(0), r.getLong(1),
-        math.round(r.getDouble(2) * 100))).toSeq
-    val got = last.orderBy("o_orderstatus")
-      .collect().map(r => (r.getString(0), r.getLong(1),
-        math.round(r.getDouble(2) * 100))).toSeq
-    assert(got == want, "trash (the real history) must be restored, not the partial tmp")
-  }
-
-  test("incrementalAggregate: batch re-run after a mid-swap crash stays exactly-once") {
-    val dir = tmp() + "/agg_rerun"
-    val o = Tables.orders(spark, sf)
-    val b1 = o.filter(col("o_orderkey") % 2 === 0)
-    val b2 = o.filter(col("o_orderkey") % 2 === 1)
-    Sinks.incrementalAggregate(spark, dir, b1, Seq("o_orderstatus"), "o_totalprice")
-    // crash window where BOTH staging dirs survive: live renamed to
-    // trash, tmp fully written (with _SUCCESS) but never promoted.
-    // The orchestrator's at-least-once contract re-runs the failed
-    // batch — recovery must restore TRASH (pre-merge history), not
-    // promote tmp, or the re-run folds b2 twice and double-counts.
-    val hPath = new org.apache.hadoop.fs.Path(dir)
-    val hfs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmpP = new org.apache.hadoop.fs.Path(dir + ".tmp")
-    Sinks.incrementalAggregate(spark, dir + "_scratch", b2,
-      Seq("o_orderstatus"), "o_totalprice") // a completed (_SUCCESS) tmp image
-    hfs.rename(new org.apache.hadoop.fs.Path(dir + "_scratch"), tmpP)
-    hfs.rename(hPath, new org.apache.hadoop.fs.Path(dir + ".old"))
-    graft.PlanCache.invalidate(dir)
-    val last = Sinks.incrementalAggregate(spark, dir, b2,
-      Seq("o_orderstatus"), "o_totalprice")
-    val want = o.groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n_rows"), sum("o_totalprice").as("sum_val"))
-      .orderBy("o_orderstatus")
-      .collect().map(r => (r.getString(0), r.getLong(1),
-        math.round(r.getDouble(2) * 100))).toSeq
-    val got = last.orderBy("o_orderstatus")
-      .collect().map(r => (r.getString(0), r.getLong(1),
-        math.round(r.getDouble(2) * 100))).toSeq
-    assert(got == want,
-      "restoring .old keeps the batch re-run exactly-once (no double fold)")
-  }
-
-  test("bucketed tables: co-bucketed fact join plans with zero Exchange") {
-    val l = Tables.lineitem(spark, sf)
-      .select("l_orderkey", "l_quantity", "l_extendedprice")
-    val o = Tables.orders(spark, sf)
-      .select("o_orderkey", "o_custkey", "o_totalprice")
-    Sinks.writeBucketed(l, "bkt_lineitem", "l_orderkey", 8,
-      sortCols = Seq("l_orderkey"))
-    Sinks.writeBucketed(o, "bkt_orders", "o_orderkey", 8,
-      sortCols = Seq("o_orderkey"))
-    try {
-      // one parquet file per bucket, not numBuckets files per task
-      val files = spark.table("bkt_lineitem").inputFiles
-      assert(files.length == 8, s"expected 8 bucket files, got ${files.length}")
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val joined = spark.table("bkt_lineitem")
-          .join(spark.table("bkt_orders"),
-            col("l_orderkey") === col("o_orderkey"))
-          .groupBy("o_custkey")
-          .agg(sum("l_quantity").as("q"))
-        val plan = joined.queryExecution.executedPlan.toString
-        assert(plan.contains("SortMergeJoin"), plan.take(2000))
-        // co-bucketing must eliminate BOTH join exchanges; the only
-        // allowed Exchange is the final group-by's (custkey != bucket
-        // key). Count them.
-        val exchanges = "Exchange".r.findAllIn(plan).length -
-          "ReusedExchange".r.findAllIn(plan).length
-        assert(exchanges <= 1, s"join must be exchange-free:\n${plan.take(3000)}")
-        // values match the unbucketed join
-        val expect = l.join(o, col("l_orderkey") === col("o_orderkey"))
-          .groupBy("o_custkey").agg(sum("l_quantity").as("q"))
-        assert(joined.except(expect).isEmpty && expect.except(joined).isEmpty)
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
-      spark.sql("DROP TABLE IF EXISTS bkt_orders")
-    }
-  }
-
-  test("versioned table: time travel reconstructs every committed version exactly") {
-    import spark.implicits._
-    val dir = tmp() + "/vt"
-    val v0 = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
-    val v1 = Seq((1L, "a"), (2L, "B"), (4L, "d")).toDF("k", "v") // upd 2, del 3, ins 4
-    val v2 = Seq((1L, "A"), (2L, "B"), (4L, "d"), (5L, "e")).toDF("k", "v")
-    assert(Sinks.commitVersion(spark, dir, v0, Seq("k"), "v") == 0)
-    assert(Sinks.commitVersion(spark, dir, v1, Seq("k"), "v") == 1)
-    assert(Sinks.commitVersion(spark, dir, v2, Seq("k"), "v") == 2)
-    def asSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(asSet(Sinks.readVersion(spark, dir, 0, Seq("k"), "v")) == asSet(v0))
-    assert(asSet(Sinks.readVersion(spark, dir, 1, Seq("k"), "v")) == asSet(v1))
-    assert(asSet(Sinks.readVersion(spark, dir, 2, Seq("k"), "v")) == asSet(v2))
-    // diffs stay O(changes): version 2's diff holds exactly 2 changed keys
-    val d2 = spark.read.parquet(f"$dir/diff_${2}%05d")
-    assert(d2.count() == 2, "only (1 -> A) update and (5) insert")
-    assert(Sinks.listVersions(spark, dir) == Seq(1, 2))
-  }
-
-  test("versioned table: checkpoints bound read plans to K joins over any history") {
-    import spark.implicits._
-    import org.apache.spark.sql.catalyst.plans.logical.Join
-    val dir = tmp() + "/vt_ckpt"
-    val K = 3
-    // 3K commits: version v holds keys 1..5 with value "v<v>" on key
-    // (v mod 5)+1 flipped each commit — every diff is tiny, history long
-    def snap(v: Int) = (1 to 5).map(k =>
-      (k.toLong, if (k == (v % 5) + 1) s"v$v" else s"s$k")).toDF("k", "v")
-    (0 to 3 * K).foreach { v =>
-      assert(Sinks.commitVersion(spark, dir, snap(v), Seq("k"), "v",
-        checkpointEvery = K) == v)
-    }
-    assert(Sinks.listCheckpoints(spark, dir) == Seq(K, 2 * K, 3 * K),
-      "a checkpoint lands every K commits")
-    def joins(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.optimizedPlan.collect { case j: Join => j }.size
-    // a read at the far end of the chain folds from ckpt_3K: zero
-    // diff joins; one step past a checkpoint folds exactly one diff
-    // (applyDiff = anti-join + union → 1 Join node per fold)
-    assert(joins(Sinks.readVersion(spark, dir, 3 * K, Seq("k"), "v")) == 0,
-      "checkpointed version reads the snapshot directly")
-    val mid = 2 * K + 1
-    assert(joins(Sinks.readVersion(spark, dir, mid, Seq("k"), "v")) <= K,
-      s"read at $mid must fold from ckpt_${2 * K}, not from base")
-    // and far more joins would be needed folding the whole chain:
-    // every version still reconstructs exactly, across boundaries
-    def asSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    for (v <- Seq(0, K - 1, K, K + 1, mid, 3 * K))
-      assert(asSet(Sinks.readVersion(spark, dir, v, Seq("k"), "v")) == asSet(snap(v)),
-        s"version $v must reconstruct exactly")
-  }
-
   test("snapshotDiff/applyDiff round-trip: old + change feed reconstructs new") {
     val o = Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")
     // a synthetic next version with all three change kinds
@@ -436,30 +49,17 @@ class SinksSpec extends SparkSpec {
       .unionByName(o.filter(col("o_orderkey") % 17 === 0)
         .select((col("o_orderkey") + 5000000L).as("o_orderkey"), col("o_totalprice")))
     val feed = Sinks.snapshotDiff(o, next, Seq("o_orderkey"), "o_totalprice")
-    val rebuilt = Sinks.applyDiff(o, feed, Seq("o_orderkey"), "o_totalprice")
+    // apply the feed: deletes and updates drop their keys, inserts
+    // and updates append their new values
+    val rebuilt = o.join(feed.select("o_orderkey"), Seq("o_orderkey"), "left_anti")
+      .unionByName(feed.filter(col("change_type") =!= "delete")
+        .select(col("o_orderkey"), col("new_val").as("o_totalprice")))
     def asSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(asSet(rebuilt) == asSet(next),
       "applying the change feed must reconstruct the new snapshot exactly")
     // and the feed is O(changes): far smaller than the table
     assert(feed.count() < o.count() / 2)
-  }
-
-  test("jdbc source: partition-parallel read with remote filter pushdown") {
-    import spark.implicits._
-    val url = "jdbc:derby:memory:graftjdbcsrc;create=true"
-    val props = new java.util.Properties()
-    val df = (0L until 100L).map(i => (i, s"name_$i", i % 7)).toDF("k", "v", "grp")
-    Sinks.writeJdbc(df, url, "src_table", props, batchSize = 25)
-    val back = Sinks.readJdbcPartitioned(spark, url, "src_table",
-      "k", 0L, 100L, 4, props)
-    assert(back.rdd.getNumPartitions == 4, "expected 4 parallel JDBC slices")
-    assert(back.count() == 100)
-    val filtered = back.filter(col("grp") === 3)
-    val p = filtered.queryExecution.executedPlan.toString
-    assert(p.contains("PushedFilters") && p.contains("grp"),
-      s"filter must push into the remote query:\n$p")
-    assert(filtered.count() == df.filter(col("grp") === 3).count())
   }
 
   test("fake multimodal decode: partition-parallel, deterministic, full coverage") {
