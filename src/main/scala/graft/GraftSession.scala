@@ -30,7 +30,22 @@ object GraftSession {
       // the correct guard at cluster scale (tests lower them to pin
       // the injection on local data).
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+      // Generated-class cache (static conf, read once when Spark's
+      // CodeGenerator initializes). The default 100 entries is below
+      // graft's working set, measured as distinct classes compiled in
+      // one cold pass: 151 for Pipeline.run, ~420 for the perfbench
+      // registry sample, 4,632-4,650 for the full 312-query sweep. Passes
+      // replay the same classes in a cycle, so a cap below the working
+      // set evicts each class before its next use and a warm pass
+      // recompiles nearly all of them; the cap covers the full sweep
+      // with headroom.
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
 
+  /** The session of every main and spec: [[builder]] at local[cpus],
+    * WARN logging, and graft's extensions (AsofJoin, TopKPerGroup,
+    * graft_dot and the other native functions), without which queries
+    * that plan through them fail.
+    */
   def local(cpus: Int = Runtime.getRuntime.availableProcessors): SparkSession = {
     val s = builder(s"local[$cpus]", math.max(cpus, 4)).getOrCreate()
     s.sparkContext.setLogLevel("WARN")

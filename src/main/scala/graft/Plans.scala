@@ -104,7 +104,6 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = GraftSession.local(4)
-    graft.plans.GraftExtensions.registerInto(spark)
     write(spark, sfDir, benchSeconds())
     PlanCache.clear()
     spark.stop()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,12 +11,7 @@ object Verify {
       if (args.length > 2) args(2).split(",").toSet else Set.empty
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors)
-    val spark = GraftSession.builder(s"local[$cpus]", math.max(cpus, 4)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // custom strategies/functions (AsofJoin, TopKPerGroup, graft_dot)
-    // live in extensions — queries that plan through them fail without
-    // this registration
-    graft.plans.GraftExtensions.registerInto(spark)
+    val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -187,10 +187,7 @@ object RecallEval {
     val sections = if (args.length > 2) args(2) else "all"
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors)
-    val spark = graft.GraftSession.builder(s"local[$cpus]", math.max(cpus, 4))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.registerInto(spark)
+    val spark = graft.GraftSession.local(cpus)
 
     val parts = scala.collection.mutable.ArrayBuffer.empty[String]
 

@@ -17,17 +17,8 @@ class PersistSiteSpec extends AnyFunSuite {
   private val forbidden =
     """\.persist\(|\.cache\(\)|localCheckpoint\(|\.checkpoint\(""".r
 
-  private def offenders(root: Path): Seq[(Path, Int, String)] = {
-    val files = Files.walk(root).iterator.asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(_.getFileName.toString == "PlanCache.scala")
-      .toSeq.sortBy(_.toString)
-    for {
-      f <- files
-      (line, i) <- Files.readAllLines(f).asScala.toSeq.zipWithIndex
-      if forbidden.findFirstIn(SourceCode.code(line)).isDefined
-    } yield (f, i + 1, line.trim)
-  }
+  private def offenders(root: Path): Seq[(Path, Int, String)] =
+    SourceCode.offenders(root, forbidden, "PlanCache.scala")
 
   test("only PlanCache.scala persists or checkpoints in src/main") {
     val hits = offenders(Paths.get("src/main"))
